@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
@@ -118,46 +120,67 @@ object GraftFunctions {
   val BloomContainName = "graft_might_contain"
   val TopKName = "graft_topk"
 
+  /** Every graft SQL function as (identifier, info, builder) — the ONE
+    * table both [[register]] and [[graft.GraftExtensions]] bind, so the
+    * two routes cannot drift apart. Each builder checks its argument
+    * count first: a wrong-arity call fails analysis with an
+    * `AnalysisException` naming the expected signature, never an index
+    * error from inside the builder. */
+  private[graft] val builders: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = {
+    def fn(name: String, cls: String, signature: String, arities: Int*)(
+        build: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls, name),
+        (args: Seq[Expression]) => {
+          if (!arities.contains(args.length))
+            throw new AnalysisException(
+              errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+              messageParameters = Map(
+                "functionName" -> s"`$signature`",
+                "expectedNum" -> arities.mkString(" or "),
+                "actualNum" -> args.length.toString,
+                "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+          build(args)
+        })
+    Seq(
+      fn(DotName, classOf[DotProduct].getName, s"$DotName(a, b)", 2) { a =>
+        DotProduct(a(0), a(1)) },
+      fn(CosineName, classOf[CosineSim].getName, s"$CosineName(a, b)", 2) { a =>
+        CosineSim(a(0), a(1)) },
+      fn(RollingHashName, classOf[RollingHash].getName,
+          s"$RollingHashName(s)", 1) { a => RollingHash(a(0)) },
+      fn(NfcName, classOf[NfcNormalize].getName, s"$NfcName(s)", 1) { a =>
+        NfcNormalize(a(0)) },
+      // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
+      // runtime-filter rule but does not register them as SQL functions;
+      // surfacing them gives pipelines the explicit build-once/probe-later
+      // bloom semi-join (cross-job pruning the optimizer rule can't do).
+      // 1-arg: Spark's default sizing; 3-arg: (col, estItems, numBits)
+      // for the per-file manifest blooms (SnapshotLog.buildBlooms)
+      fn(BloomAggName, classOf[BloomFilterAggregate].getName,
+          s"$BloomAggName(col[, estItems, numBits])", 1, 3) { a =>
+        (if (a.length == 3) new BloomFilterAggregate(a(0), a(1), a(2))
+         else new BloomFilterAggregate(a(0))).toAggregateExpression() },
+      fn(BloomContainName, classOf[BloomFilterMightContain].getName,
+          s"$BloomContainName(bloom, value)", 2) { a =>
+        BloomFilterMightContain(a(0), a(1)) },
+      fn(TopKName, classOf[TopKAgg].getName, s"$TopKName(key, id, k, asc)", 4) { a =>
+        TopKAgg(a(0), a(1), a(2), a(3)).toAggregateExpression() })
+  }
+
   /** Idempotent per-session registration via the function registry —
     * the expressions then resolve in both the Column DSL and plain SQL
     * text. (For cluster deploys, [[graft.GraftExtensions]] injects the
-    * same set through spark.sql.extensions.) Already-registered names
-    * are SKIPPED, not replaced: the register call sits inside operator
-    * builders (MinHash, SimHash, ANN, bloom stats) that run per query,
-    * and a `createOrReplaceTempFunction` on every build both pays the
-    * registry write and spams a replaced-function WARN per call. */
+    * same [[builders]] through spark.sql.extensions.) Already-registered
+    * names are SKIPPED, not replaced: the register call sits inside
+    * operator builders (MinHash, SimHash, ANN, bloom stats) that run per
+    * query, and a `createOrReplaceTempFunction` on every build both pays
+    * the registry write and spams a replaced-function WARN per call. */
   def register(spark: SparkSession): Unit = {
     val fr = spark.sessionState.functionRegistry
-    def reg(name: String)(
-        b: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      if (fr.lookupFunctionBuilder(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)).isEmpty)
-        fr.createOrReplaceTempFunction(name, b, "built-in")
-    reg(DotName) { exprs => DotProduct(exprs(0), exprs(1)) }
-    reg(CosineName) { exprs => CosineSim(exprs(0), exprs(1)) }
-    reg(RollingHashName) { exprs => RollingHash(exprs.head) }
-    reg(NfcName) { exprs => NfcNormalize(exprs.head) }
-    // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
-    // runtime-filter rule but does not register them as SQL functions;
-    // surfacing them gives pipelines the explicit build-once/probe-later
-    // bloom semi-join (cross-job pruning the optimizer rule can't do).
-    reg(BloomAggName) { exprs =>
-      // 1-arg: Spark's default sizing; 3-arg: (col, estItems, numBits)
-      // for the per-file manifest blooms (SnapshotLog.buildBlooms)
-      (if (exprs.length >= 3)
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      else
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs.head)).toAggregateExpression()
-    }
-    reg(BloomContainName) { exprs =>
-      org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))
-    }
-    reg(TopKName) { exprs =>
-      TopKAgg(exprs(0), exprs(1), exprs(2), exprs(3)).toAggregateExpression()
+    builders.foreach { case (id, _, build) =>
+      if (fr.lookupFunctionBuilder(id).isEmpty)
+        fr.createOrReplaceTempFunction(id.funcName, build, "built-in")
     }
   }
 

@@ -132,20 +132,28 @@ object ConnectedComponents {
     while (!converged && i < maxIter) {
       // TWO alternations per driver action (r16): both LAZY checkpoints
       // materialize inside the one job that computes both signatures —
-      // a union of two 1-row aggs, collected in child order — so the
-      // consecutive-signature convergence check is exactly the old
+      // a union of two 1-row aggs, each tagged with its alternation
+      // (1, 2) so the pairing never rests on a union's child order — so
+      // the consecutive-signature convergence check is exactly the old
       // per-round one while the action/job count halves. alternate() is
       // idempotent at the fixpoint (a star set maps to itself), so the
       // at-most-one extra alternation a 2-stride can run is a no-op
-      // over the tiny converged edge set.
+      // over the tiny converged edge set. One alternation left before
+      // `maxIter` runs alone: never more than `maxIter` in all.
       val n1 = alternate(e).localCheckpoint(eager = false)
-      val n2 = alternate(n1).localCheckpoint(eager = false)
-      val sigs = sigDf(n1).unionAll(sigDf(n2)).collect()
-      val (s1, s2) = (sigOf(sigs(0)), sigOf(sigs(1)))
+      val ns =
+        if (maxIter - i < 2) Seq(n1)
+        else Seq(n1, alternate(n1).localCheckpoint(eager = false))
+      val steps = ns.size
+      val sigs = ns.zipWithIndex
+        .map { case (n, k) => sigDf(n).withColumn("stage", lit(k + 1)) }
+        .reduce(_ unionAll _).collect()
+        .map(r => r.getInt(2) -> sigOf(r)).toMap
+      val s1 = sigs(1)
       if (s1 == prev) { e = n1; converged = true }
-      else if (s2 == s1) { e = n2; converged = true }
-      else { e = n2; prev = s2 }
-      i += 2
+      else if (steps == 2 && sigs(2) == s1) { e = ns(1); converged = true }
+      else { e = ns.last; prev = sigs(steps) }
+      i += steps
     }
     if (!converged) {
       throw new IllegalStateException(

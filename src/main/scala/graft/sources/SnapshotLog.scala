@@ -519,50 +519,47 @@ object SnapshotLog {
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
+    commitLoop(fs, bp, maxRetries, "REPARTITION", base) { _ =>
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"no committed version at $base"))
       val cur = m.props.getOrElse(PartColProp, sys.error(
         s"$base does not declare $PartColProp — partition evolution " +
           "needs a declared layout (set the property once, '' for " +
           "unpartitioned)"))
-      if (sameLayout(cur, newPartCol)) return m.version
-      val sc = m.schema.getOrElse(sys.error(
-        "partition evolution needs a schema header (legacy manifest) — " +
-          "any write records one first"))
-      partColsOf(newPartCol).foreach { c =>
-        require(sc.fields.exists(_.name.equalsIgnoreCase(c)),
-          s"no such column: $c (new partition layout '$newPartCol')")
+      if (sameLayout(cur, newPartCol)) Done(m.version) else {
+        val sc = m.schema.getOrElse(sys.error(
+          "partition evolution needs a schema header (legacy manifest) — " +
+            "any write records one first"))
+        partColsOf(newPartCol).foreach { c =>
+          require(sc.fields.exists(_.name.equalsIgnoreCase(c)),
+            s"no such column: $c (new partition layout '$newPartCol')")
+        }
+        // register the OUTGOING layout in the spec history, reusing its
+        // id when this spelling was current once before (A → B → A)
+        val hist = m.partSpecHistory
+        val curId = hist.collectFirst { case (id, l) if sameLayout(l, cur) => id }
+          .getOrElse(if (hist.isEmpty) 0 else hist.keys.max + 1)
+        // untagged live keys were written under the outgoing layout;
+        // keys tagged with the INCOMING layout become current again and
+        // shed their tag
+        val newTags = m.files.keySet
+          .filterNot(k => m.props.contains(KeySpecPrefix + k))
+          .map(k => (KeySpecPrefix + k) -> curId.toString).toMap
+        val retag = m.props.keysIterator.filter(_.startsWith(KeySpecPrefix))
+          .filter(k => m.props.get(k).flatMap(_.toIntOption).flatMap(hist.get)
+            .exists(l => sameLayout(l, newPartCol))).toSeq
+        val props0 = (m.props -- retag) ++ newTags +
+          ((PartSpecPrefix + curId.toString) -> cur) +
+          (PartColProp -> partColsOf(newPartCol).mkString(","))
+        // a generated new partition column stamps its generation
+        // timezone now (and enforces a mismatch against an existing
+        // stamp), not at the first write — readers may derive before one
+        val props = props0 ++ genTzStamp(spark, props0, newPartCol)
+        val version = nextVersion(fs, bp, m.version)
+        Commit(m.copy(version = version, props = props,
+          op = Some("REPARTITION")), version)
       }
-      // register the OUTGOING layout in the spec history, reusing its
-      // id when this spelling was current once before (A → B → A)
-      val hist = m.partSpecHistory
-      val curId = hist.collectFirst { case (id, l) if sameLayout(l, cur) => id }
-        .getOrElse(if (hist.isEmpty) 0 else hist.keys.max + 1)
-      // untagged live keys were written under the outgoing layout;
-      // keys tagged with the INCOMING layout become current again and
-      // shed their tag
-      val newTags = m.files.keySet
-        .filterNot(k => m.props.contains(KeySpecPrefix + k))
-        .map(k => (KeySpecPrefix + k) -> curId.toString).toMap
-      val retag = m.props.keysIterator.filter(_.startsWith(KeySpecPrefix))
-        .filter(k => m.props.get(k).flatMap(_.toIntOption).flatMap(hist.get)
-          .exists(l => sameLayout(l, newPartCol))).toSeq
-      val props0 = (m.props -- retag) ++ newTags +
-        ((PartSpecPrefix + curId.toString) -> cur) +
-        (PartColProp -> partColsOf(newPartCol).mkString(","))
-      // a generated new partition column stamps its generation
-      // timezone now (and enforces a mismatch against an existing
-      // stamp), not at the first write — readers may derive before one
-      val props = props0 ++ genTzStamp(spark, props0, newPartCol)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version, props = props,
-          op = Some("REPARTITION")))) return version
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"REPARTITION lost $maxRetries commit races on $base")
   }
 
   /** The current layout plus every legacy layout with live keys in
@@ -632,19 +629,38 @@ object SnapshotLog {
     }.distinct.sorted
   }
 
-  /** Replace `removed`'s manifest entries with the staged layout,
-    * APPENDING into any partition the removal did not cover: under
-    * partition evolution a rewrite's rows can route into a
+  /** [[listStaged]] output as manifest entries: partition → its staged
+    * files, sorted. */
+  private def stagedByPart(
+      staged: Seq[(String, String, Long)]): Map[String, Seq[String]] =
+    staged.groupBy(_._1).map { case (p, fls) => p -> fls.map(_._2).sorted }
+
+  /** Version `version` of `m` with the `removed` partitions rewritten
+    * as `staged` — the splice every row-rewrite verb and MERGE commits.
+    * Rewritten files take their stats and blooms with them (untouched
+    * files keep theirs; bloom-less files are never pruned, so staleness
+    * is impossible by construction) and their deletion vectors (the
+    * rewrite read THROUGH them; the replacement files carry no deleted
+    * positions). Staged files get byte sizes plus `stagedStats`. The
+    * staged layout APPENDS into any partition the removal did not
+    * cover: under partition evolution a rewrite's rows can route into a
     * current-layout partition that was not part of the affected set
     * (legacy-partition migration), and wholesale `++` would silently
     * drop that partition's existing files. Pre-evolution behavior
     * (staged ⊆ removed) is byte-identical. */
   private def spliceStaged(
-      files: Map[String, Seq[String]], removed: Iterable[String],
-      stagedByPart: Map[String, Seq[String]]): Map[String, Seq[String]] = {
-    val kept = files -- removed
-    kept ++ stagedByPart.map { case (p, fls) =>
-      p -> (kept.getOrElse(p, Nil) ++ fls).sorted }
+      spark: SparkSession, fs: FileSystem, bp: Path, m: Manifest,
+      version: Long, removed: Seq[String], staged: Seq[(String, String, Long)],
+      stagedStats: Map[String, Map[String, (String, String)]]): Manifest = {
+    val gone = removed.flatMap(p => m.files.getOrElse(p, Nil))
+    val kept = m.files -- removed
+    m.copy(version = version,
+      files = kept ++ stagedByPart(staged).map { case (p, fls) =>
+        p -> (kept.getOrElse(p, Nil) ++ fls).sorted },
+      stats = (m.stats -- gone) ++
+        mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
+      blooms = m.blooms -- gone,
+      dvs = m.dvs -- gone)
   }
 
   /** Refuse a staged write that lands files under a partition KEY the
@@ -1965,17 +1981,66 @@ object SnapshotLog {
       shardPtrsOf(fs, base, t, v - 1).map(sp => sp.part -> sp).toMap)
       .getOrElse(Map.empty)
 
-  /** Test seam: runs inside [[upsertBatch]] after a merge is staged,
-    * immediately before each commit attempt — the only window where a
-    * concurrent committer can invalidate staged output. Deterministic
-    * race regressions (ConcurrencyStressSpec) interleave a commit here;
+  /** Test seam: runs inside [[commitLoop]] immediately before each
+    * commit attempt, with the candidate manifest's op (`UPSERT`,
+    * `OPTIMIZE`, …) — the window where a concurrent committer can
+    * invalidate staged output or force a retry. Deterministic race
+    * regressions interleave a commit here, filtering on the op;
     * production leaves it a no-op. */
-  private[sources] var onBeforeUpsertCommit: () => Unit = () => ()
+  private[sources] var onBeforeCommit: String => Unit = _ => ()
 
-  /** Test seam: runs inside [[optimizeTable]] immediately before each
-    * commit attempt — the window where a concurrent committer forces
-    * the conflict-narrowed retry. Production leaves it a no-op. */
-  private[sources] var onBeforeOptimizeCommit: () => Unit = () => ()
+  /** What one [[commitLoop]] attempt decided: [[Done]] answers without
+    * committing (a txn replay, nothing matched, already at the
+    * target); [[Commit]] proposes `next`, and its result is evaluated
+    * only once that commit has won. */
+  private sealed trait Attempt[+A]
+  private final case class Done[+A](result: A) extends Attempt[A]
+  private final class Commit[+A](val next: Manifest, won: => A) extends Attempt[A] {
+    def result: A = won
+  }
+  private object Commit {
+    def apply[A](next: Manifest, won: => A): Attempt[A] = new Commit(next, won)
+  }
+
+  /** The optimistic-commit loop every writer runs: up to `maxRetries`
+    * attempts, each re-reading table state inside `body(attempt)`; a
+    * proposed manifest goes through [[onBeforeCommit]] and
+    * [[tryCommit]], and a lost race re-runs the body against the
+    * winner's state. Staged output a retry may reuse lives in the
+    * calling verb's closure. Exhaustion throws naming `verb`. */
+  private def commitLoop[A](
+      fs: FileSystem, bp: Path, maxRetries: Int, verb: String, where: String,
+      races: String = "commit races")(body: Int => Attempt[A]): A = {
+    var attempt = 0
+    while (attempt < maxRetries) {
+      body(attempt) match {
+        case Done(r) => return r
+        case c: Commit[A @unchecked] =>
+          onBeforeCommit(c.next.op.getOrElse(""))
+          if (tryCommit(fs, bp, c.next)) return c.result
+      }
+      attempt += 1
+    }
+    throw new IllegalStateException(s"$verb lost $maxRetries $races on $where")
+  }
+
+  /** [[commitLoop]] for a METADATA-ONLY verb on an existing table: each
+    * attempt reads the live manifest (a table with no committed version
+    * refuses, with `absent` when given), and `edit` validates it and
+    * builds its successor at the given next free version — the version
+    * returned. */
+  private def alterTable(
+      spark: SparkSession, base: String, maxRetries: Int, verb: String,
+      absent: Option[String] = None)(edit: (Manifest, Long) => Manifest): Long = {
+    val bp = new Path(base)
+    val fs = fsFor(spark, bp)
+    commitLoop(fs, bp, maxRetries, verb, base) { _ =>
+      val m = readManifest(fs, bp).getOrElse(
+        sys.error(absent.getOrElse(s"$base has no committed version")))
+      val version = nextVersion(fs, bp, m.version)
+      Commit(edit(m, version), version)
+    }
+  }
 
   /** A data file's row count: manifest stats when present, else one
     * parquet footer read (the fallback that makes enabling row
@@ -2481,8 +2546,6 @@ object SnapshotLog {
     val targetFields = changes.schema.fields.toSeq
       .filterNot(f => opCol.contains(f.name))
 
-    var attempt = 0
-    var committed = false
     // the affected partitions' file lists the staged data was merged
     // against — while the live manifest still agrees on them, the
     // staged files remain valid and a conflict retry is metadata-only
@@ -2505,9 +2568,9 @@ object SnapshotLog {
     // (pre, post) state of the AFFECTED partitions only — the change
     // feed derives from these, never from a full-table diff
     var cdfPair: Option[(DataFrame, DataFrame)] = None
-    var committedVersion = -1L
-    try {
-      while (!committed && attempt < maxRetries) {
+    val committedVersion: Option[Long] = try {
+      commitLoop(fs, bp, maxRetries, "SnapshotLog commit",
+          s"$base — raise maxRetries", races = "races") { attempt =>
         val m = readManifest(fs, bp).getOrElse(Manifest(0L, Map.empty))
         requireCurrentLayout(m, partCol)
         // exactly-once gate: a replayed (appId, batchId) is already in
@@ -2515,183 +2578,163 @@ object SnapshotLog {
         // concurrent duplicate writer that wins the commit race makes
         // this attempt a no-op instead of a double-apply; any files
         // this attempt staged are unreferenced orphans, vacuum's job.
-        // (`return` still runs the finally's unpersist.)
         if (txn.exists { case (a, b) => m.txns.get(a).exists(_ >= b) })
-          return
-        // CHECK constraints gate the batch up front (delete markers
-        // exempt: a CDC 'D' row's payload never lands in the table)
-        if (attempt == 0)
-          enforceConstraints(
-            opCol.map(oc => changes.filter(upper(col(oc)) =!= "D"))
-              .getOrElse(changes), m, base)
-        // allocate past any in-flight/crashed claim, not just past the
-        // newest COMPLETE manifest, or a dead claim blocks the chain
-        val version = nextVersion(fs, bp, m.version)
-        // mixed layout (partition evolution): rows with matching merge
-        // keys may live in ANY legacy partition (their keys there are
-        // unknowable from the change batch) — fold every legacy key
-        // into the affected set; the rewrite restages those rows under
-        // the current layout, migrating the partitions as a side effect
-        val affectedAll: Seq[String] =
-          if (m.legacyKeys.isEmpty) affected.toSeq
-          else (affected ++ m.legacyKeys).distinct.sorted.toSeq
-        val affectedState: Map[String, Seq[String]] =
-          affectedAll.iterator.map(p => p -> m.files.getOrElse(p, Nil)).toMap
-        val identSnap =
-          m.props.filter(_._1.startsWith(IdentityHighWaterPrefix))
-        val dvSnap: Map[String, Dv] = {
-          val fls = affectedAll.flatMap(p => m.files.getOrElse(p, Nil)).toSet
-          m.dvs.filter { case (f, _) => fls(f) }
-        }
-        if (!mergedAgainst.contains(
-            (affectedState, m.colmap, m.dropped, identSnap, dvSnap))) {
-          val relFiles = affectedAll.flatMap(p => m.files.getOrElse(p, Nil)).toSeq
-          // row-tracked tables preserve ids BY KEY through the merge:
-          // the affected rows' ids ride a (keys → id) side frame and
-          // re-attach to the merge output as the materialized column —
-          // an UPDATE keeps its row's identity (even across a
-          // partition move); INSERTs stay null and allocate fresh at
-          // commit. Kept OUT of baseSubset so the CDF pre/post schemas
-          // stay identical.
-          val baseIds: Option[DataFrame] =
-            if (!m.rowTracking || relFiles.isEmpty) None
-            else Some(readFilesWithRowIds(spark, bp, m, relFiles)
-              .select(keys.map(col) :+ col(RowIdCol).as(MatRowIdCol): _*))
-          val baseSubset = {
-            if (relFiles.isEmpty)
-              changes.limit(0).select(targetFields.map(f => col(f.name)): _*)
-            else {
-              // align to the change batch's schema: columns the old files
-              // lack backfill NULL (add-column evolution), columns the batch
-              // dropped disappear (the change stream defines the live schema)
-              val df = readFiles(spark, bp, m, relFiles)
-              val have = df.columns.toSet
-              df.select(targetFields.map { f =>
-                if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
-                else lit(null).cast(f.dataType).as(f.name)
-              }: _*)
+          Done(None)
+        else {
+          // CHECK constraints gate the batch up front (delete markers
+          // exempt: a CDC 'D' row's payload never lands in the table)
+          if (attempt == 0)
+            enforceConstraints(
+              opCol.map(oc => changes.filter(upper(col(oc)) =!= "D"))
+                .getOrElse(changes), m, base)
+          // allocate past any in-flight/crashed claim, not just past the
+          // newest COMPLETE manifest, or a dead claim blocks the chain
+          val version = nextVersion(fs, bp, m.version)
+          // mixed layout (partition evolution): rows with matching merge
+          // keys may live in ANY legacy partition (their keys there are
+          // unknowable from the change batch) — fold every legacy key
+          // into the affected set; the rewrite restages those rows under
+          // the current layout, migrating the partitions as a side effect
+          val affectedAll: Seq[String] =
+            if (m.legacyKeys.isEmpty) affected.toSeq
+            else (affected ++ m.legacyKeys).distinct.sorted.toSeq
+          val affectedState: Map[String, Seq[String]] =
+            affectedAll.iterator.map(p => p -> m.files.getOrElse(p, Nil)).toMap
+          val identSnap =
+            m.props.filter(_._1.startsWith(IdentityHighWaterPrefix))
+          val dvSnap: Map[String, Dv] = {
+            val fls = affectedAll.flatMap(p => m.files.getOrElse(p, Nil)).toSet
+            m.dvs.filter { case (f, _) => fls(f) }
+          }
+          if (!mergedAgainst.contains(
+              (affectedState, m.colmap, m.dropped, identSnap, dvSnap))) {
+            val relFiles = affectedAll.flatMap(p => m.files.getOrElse(p, Nil)).toSeq
+            // row-tracked tables preserve ids BY KEY through the merge:
+            // the affected rows' ids ride a (keys → id) side frame and
+            // re-attach to the merge output as the materialized column —
+            // an UPDATE keeps its row's identity (even across a
+            // partition move); INSERTs stay null and allocate fresh at
+            // commit. Kept OUT of baseSubset so the CDF pre/post schemas
+            // stay identical.
+            val baseIds: Option[DataFrame] =
+              if (!m.rowTracking || relFiles.isEmpty) None
+              else Some(readFilesWithRowIds(spark, bp, m, relFiles)
+                .select(keys.map(col) :+ col(RowIdCol).as(MatRowIdCol): _*))
+            val baseSubset = {
+              if (relFiles.isEmpty)
+                changes.limit(0).select(targetFields.map(f => col(f.name)): _*)
+              else {
+                // align to the change batch's schema: columns the old files
+                // lack backfill NULL (add-column evolution), columns the batch
+                // dropped disappear (the change stream defines the live schema)
+                val df = readFiles(spark, bp, m, relFiles)
+                val have = df.columns.toSet
+                df.select(targetFields.map { f =>
+                  if (have(f.name)) col(f.name).cast(f.dataType).as(f.name)
+                  else lit(null).cast(f.dataType).as(f.name)
+                }: _*)
+              }
             }
-          }
-          // identity NULL slots allocate against THIS attempt's
-          // high-water, before the merge so merged rows carry ids;
-          // provided (non-null) values pass through — a merge update
-          // arm carries the table's own id
-          val (changesId, hwUpd) =
-            applyIdentity(changes, m, enforceAlways = false)
-          stagedHwU = hwUpd
-          val merged0 = (opCol match {
-            case None => graft.operators.MergeUpsert(baseSubset, changesId, keys)
-            case Some(oc) => graft.operators.MergeUpsert.cdc(baseSubset, changesId, keys, oc)
-          }).drop("merge_action")
-          val merged = baseIds match {
-            case None => merged0
-            case Some(ids) => merged0.join(ids, keys, "left")
-          }
-          // staging dir unique per attempt: a concurrent writer that
-          // picked the same (batchId, version) must never overwrite a
-          // dir the race winner committed — a loser's orphan dir is
-          // vacuum's job. The partition column is DUPLICATED into __p
-          // for the directory layout so it survives as a real column in
-          // the data files (manifest-list reads never do Hive dir-name
-          // reconstruction).
-          val rel =
-            s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
-          val dir = new Path(bp, rel)
-          // written from the merge's natural task distribution: every
-          // task streams its slice of each partition value in parallel
-          // (repartitioning one-task-per-value would serialize a large
-          // partition through a single writer); the resulting
-          // several-files-per-partition layout is what
-          // [[compactPartition]] exists to fold down.
-          // `clusterBy` instead range-clusters the staged write (z-order
-          // for multi-key) so each file covers a tight key range — the
-          // layout that makes the recorded `statsCols` bounds actually
-          // selective at read ([[filesForRange]]).
-          val toWrite0 = merged.withColumn("__p", partRoute(partCol))
-          // range clustering and bucketing both dictate the file
-          // layout — they cannot compose (a range-routed file spans
-          // buckets, breaking the bucketed scan's file↔bucket map)
-          require(clusterBy.isEmpty || m.bucketSpec.isEmpty,
-            "clusterBy/ZORDER is incompatible with a bucketed table")
-          val toWrite =
-            // Plain merge path (no clusterBy layout, no per-file stats):
-            // REBALANCE by the partition value before the write (guide
-            // §6). Unhinted, the merge's shuffle-partition distribution
-            // fans out as (tasks × partition values) files — q76's
-            // 25-value table staged ~800 ≈20-row files per commit, each
-            // listed and re-read by the NEXT commit. AQE's rebalance
-            // coalesces small partition values to one file and splits
-            // large ones at the advisory size, so local commits stop
-            // churning tiny files and at-scale files land in the
-            // 64MB–1GB band. Stats/cluster layouts are left exactly as
-            // routed — file-skip-graded tables keep their geometry.
-            if (clusterBy.isEmpty && statsCols.isEmpty)
-              toWrite0.hint("rebalance", col("__p"))
-            else if (clusterBy.isEmpty) toWrite0
-            else {
-              val (df, sortCol) =
-                if (clusterBy.size == 1) (toWrite0, col(clusterBy.head))
-                else (Clustering.withZ(toWrite0, clusterBy), col("__z"))
-              df.repartitionByRange(math.max(clusterFiles, 1), sortCol)
-                .sortWithinPartitions(sortCol)
-                .drop("__z")
+            // identity NULL slots allocate against THIS attempt's
+            // high-water, before the merge so merged rows carry ids;
+            // provided (non-null) values pass through — a merge update
+            // arm carries the table's own id
+            val (changesId, hwUpd) =
+              applyIdentity(changes, m, enforceAlways = false)
+            stagedHwU = hwUpd
+            val merged0 = (opCol match {
+              case None => graft.operators.MergeUpsert(baseSubset, changesId, keys)
+              case Some(oc) => graft.operators.MergeUpsert.cdc(baseSubset, changesId, keys, oc)
+            }).drop("merge_action")
+            val merged = baseIds match {
+              case None => merged0
+              case Some(ids) => merged0.join(ids, keys, "left")
             }
-          stagePartitioned(toPhysical(toWrite, m), m, fs, dir)
-          staged = listStaged(fs, dir, rel)
-          stagedStats =
-            if (statsCols.isEmpty) Map.empty
-            else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
-          if (cdfOn) {
-            // post-state re-read from the immutable staged files (not
-            // the merge plan, which would re-run the join on feed write)
-            val post = toLogical(spark.read.parquet(dir.toString), m)
-              .select(targetFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-            cdfPair = Some((baseSubset, post))
+            // staging dir unique per attempt: a concurrent writer that
+            // picked the same (batchId, version) must never overwrite a
+            // dir the race winner committed — a loser's orphan dir is
+            // vacuum's job. The partition column is DUPLICATED into __p
+            // for the directory layout so it survives as a real column in
+            // the data files (manifest-list reads never do Hive dir-name
+            // reconstruction).
+            val rel =
+              s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
+            val dir = new Path(bp, rel)
+            // a plain merge rebalances by the partition value (below);
+            // `clusterBy` instead range-clusters the staged write (z-order
+            // for multi-key) so each file covers a tight key range — the
+            // layout that makes the recorded `statsCols` bounds actually
+            // selective at read ([[filesForRange]]). Files still accrue
+            // across commits; [[compactPartition]] folds them down.
+            val toWrite0 = merged.withColumn("__p", partRoute(partCol))
+            // range clustering and bucketing both dictate the file
+            // layout — they cannot compose (a range-routed file spans
+            // buckets, breaking the bucketed scan's file↔bucket map)
+            require(clusterBy.isEmpty || m.bucketSpec.isEmpty,
+              "clusterBy/ZORDER is incompatible with a bucketed table")
+            val toWrite =
+              // Plain merge path (no clusterBy layout, no per-file stats):
+              // REBALANCE by the partition value before the write (guide
+              // §6). Unhinted, the merge's shuffle-partition distribution
+              // fans out as (tasks × partition values) files — q76's
+              // 25-value table staged ~800 ≈20-row files per commit, each
+              // listed and re-read by the NEXT commit. AQE's rebalance
+              // coalesces small partition values to one file and splits
+              // large ones at the advisory size, so local commits stop
+              // churning tiny files and at-scale files land in the
+              // 64MB–1GB band. Stats/cluster layouts are left exactly as
+              // routed — file-skip-graded tables keep their geometry.
+              // Bucketed tables skip the hint: [[stagePartitioned]]
+              // already repartitions them by the bucket columns, and the
+              // optimizer keeps a rebalance under that repartition as a
+              // second, wasted shuffle.
+              if (clusterBy.isEmpty && statsCols.isEmpty && m.bucketSpec.isEmpty)
+                toWrite0.hint("rebalance", col("__p"))
+              else if (clusterBy.isEmpty) toWrite0
+              else {
+                val (df, sortCol) =
+                  if (clusterBy.size == 1) (toWrite0, col(clusterBy.head))
+                  else (Clustering.withZ(toWrite0, clusterBy), col("__z"))
+                df.repartitionByRange(math.max(clusterFiles, 1), sortCol)
+                  .sortWithinPartitions(sortCol)
+                  .drop("__z")
+              }
+            stagePartitioned(toPhysical(toWrite, m), m, fs, dir)
+            staged = listStaged(fs, dir, rel)
+            stagedStats =
+              if (statsCols.isEmpty) Map.empty
+              else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+            if (cdfOn) {
+              // post-state re-read from the immutable staged files (not
+              // the merge plan, which would re-run the join on feed write)
+              val post = toLogical(spark.read.parquet(dir.toString), m)
+                .select(targetFields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+              cdfPair = Some((baseSubset, post))
+            }
+            mergedAgainst = Some(
+              (affectedState, m.colmap, m.dropped, identSnap, dvSnap))
           }
-          mergedAgainst = Some(
-            (affectedState, m.colmap, m.dropped, identSnap, dvSnap))
+          requireNoLegacyCollision(m, partCol, staged.map(_._1).distinct,
+            affectedAll.toSet)
+          val next = spliceStaged(spark, fs, bp, m, version, affectedAll,
+            staged, stagedStats).copy(
+            // a legacy table (no schema header) with partitions this batch
+            // did NOT rewrite keeps reading by footer mergeSchema — those
+            // files may hold columns the change stream never saw, and a
+            // header built from the batch alone would hide them
+            schemaJson =
+              if (m.schemaJson.isEmpty && (m.files -- affectedAll).nonEmpty) None
+              else evolveSchema(m.schemaJson,
+                org.apache.spark.sql.types.StructType(targetFields.toArray)),
+            op = Some(if (opCol.isDefined) "CDC" else "UPSERT"),
+            txns = m.txns ++ txn,
+            props = m.props ++ genTzStamp(spark, m.props, partCol) ++ stagedHwU)
+          Commit(next, Some(version))
         }
-        val replaced = affectedAll.flatMap(p => m.files.getOrElse(p, Nil))
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys,
-          affectedAll.toSet)
-        val next = Manifest(
-          version,
-          spliceStaged(m.files, affectedAll, stagedByPart),
-          (m.stats -- replaced) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-          // rewritten files take their blooms with them; untouched
-          // files keep theirs (conservative: bloom-less files are
-          // never pruned, so staleness is impossible by construction)
-          m.blooms -- replaced,
-          // rewritten files' rows were merged THROUGH their DVs; the
-          // replacement files carry no deleted positions
-          m.dvs -- replaced,
-          // a legacy table (no schema header) with partitions this batch
-          // did NOT rewrite keeps reading by footer mergeSchema — those
-          // files may hold columns the change stream never saw, and a
-          // header built from the batch alone would hide them
-          if (m.schemaJson.isEmpty && (m.files -- affectedAll).nonEmpty) None
-          else evolveSchema(m.schemaJson,
-            org.apache.spark.sql.types.StructType(targetFields.toArray)),
-          Some(if (opCol.isDefined) "CDC" else "UPSERT"),
-          m.constraints,
-          m.txns ++ txn,
-          m.props ++ genTzStamp(spark, m.props, partCol) ++ stagedHwU,
-          m.colmap, m.dropped)
-        onBeforeUpsertCommit()
-        committed = tryCommit(fs, bp, next)
-        if (committed) committedVersion = version
-        attempt += 1
       }
     } finally changes.unpersist()
-    if (!committed) throw new IllegalStateException(
-      s"SnapshotLog commit lost $maxRetries races on $base — raise maxRetries")
-    if (cdfOn) cdfPair.foreach { case (pre, post) =>
-      commitCdfVersion(fs, bp, committedVersion,
-        changeFeed(pre, post, keys)
-          .withColumn("_commit_version", lit(committedVersion)))
-    }
+    for (v <- committedVersion; (pre, post) <- cdfPair if cdfOn)
+      commitCdfVersion(fs, bp, v, changeFeed(pre, post, keys))
   }
 
   /** APPEND (or full OVERWRITE) a batch of rows as a new commit — the
@@ -2745,8 +2788,6 @@ object SnapshotLog {
     partColsOf(partCol).foreach(pc => require(
       fields.exists(_.name.equalsIgnoreCase(pc)),
       s"append batch lacks partition column $pc"))
-    var attempt = 0
-    var committedV = -1L
     var staged: Seq[(String, String, Long)] = Nil
     // mapping under which `staged` was renamed logical→physical — a
     // racing RENAME/DROP COLUMN invalidates it (restage; the old
@@ -2757,12 +2798,32 @@ object SnapshotLog {
     var stagedUnder:
       Option[(Map[String, String], Set[String], Map[String, String])] = None
     var stagedHw: Map[String, String] = Map.empty
-    // the manifest the successful commit replaced — overwrite's CDF
-    // needs its rows as typed deletes (read lazily AFTER commit from
-    // the old files, which stay on disk until vacuum)
-    var replacedM: Option[Manifest] = None
+    // every staged row is an INSERT; an overwrite additionally emits
+    // the rows of the manifest the commit replaced as typed deletes
+    // (Delta CDF semantics for INSERT OVERWRITE), read AFTER the commit
+    // from the old files (on disk until vacuum) under their OWN column
+    // mapping — `replaced` is the unstripped manifest
+    def publishCdf(v: Long, replaced: Manifest): Unit = {
+      val stagedAbs = staged.map { case (_, rel, _) =>
+        new Path(bp, rel).toString }
+      val ins = spark.read.parquet(stagedAbs: _*)
+        .select(fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+        .withColumn("change_type", lit("insert"))
+      val feed =
+        if (!overwrite || replaced.files.isEmpty) ins
+        else readSnapshot(spark, bp, replaced, None)
+          .select(fields.map(f =>
+            if (replaced.schema.exists(_.fieldNames.contains(f.name)) ||
+              replaced.schemaJson.isEmpty)
+              col(f.name).cast(f.dataType).as(f.name)
+            else lit(null).cast(f.dataType).as(f.name)): _*)
+          .withColumn("change_type", lit("delete"))
+          .unionByName(ins)
+      commitCdfVersion(fs, bp, v, feed)
+    }
     val allTxns = txnsAdd ++ txn
-    while (committedV < 0 && attempt < maxRetries) {
+    commitLoop(fs, bp, maxRetries, "SnapshotLog append",
+        s"$base — raise maxRetries", races = "races") { attempt =>
       val m0Read = readManifest(fs, bp).getOrElse(Manifest(0L, Map.empty))
       // a REPLACE that explicitly redeclares the layout (propsAdd) is
       // the one legitimate way to write an evolved table under a
@@ -2778,119 +2839,91 @@ object SnapshotLog {
       // PARTIAL overlap means a concurrent ingest absorbed part of
       // this batch — committing the staged data would duplicate that
       // part, so fail loudly and let the caller re-diff and restage.
-      if (allTxns.nonEmpty) {
-        val satisfied =
-          allTxns.count { case (a, b) => m.txns.get(a).exists(_ >= b) }
-        if (satisfied == allTxns.size) return m.version
+      val satisfied =
+        allTxns.count { case (a, b) => m.txns.get(a).exists(_ >= b) }
+      if (allTxns.nonEmpty && satisfied == allTxns.size) Done(m.version)
+      else {
         if (satisfied > 0) throw new PartialTxnConflict(
           s"$satisfied of ${allTxns.size} transaction keys already " +
             s"committed on $base — batch contents are stale; re-diff " +
             "against the live manifest and retry with the remainder")
-      }
-      val version = nextVersion(fs, bp, m.version)
-      if (attempt == 0) enforceConstraints(rows1, m, base)
-      val identSnap = m.props.filter(_._1.startsWith(IdentityHighWaterPrefix))
-      if (staged.isEmpty ||
-          !stagedUnder.contains((m.colmap, m.dropped, identSnap))) {
-        val rel =
-          s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        val (rows2, hwUpd) = applyIdentity(rows1, m, enforceAlways = true)
-        stagedHw = hwUpd
-        // REBALANCE by partition value before the write (guide §6, same
-        // as the merge path): without it an append fans out as (source
-        // tasks × partition values) files. Appends record no per-file
-        // column stats (no statsCols parameter exists here), so no
-        // pruning geometry is disturbed; identity values are
-        // content-hash-sharded and partitioning-independent. Cross-batch
-        // fragmentation still accrues (each append commits its own
-        // files) — compaction keeps its job.
-        stagePartitioned(
-          toPhysical(rows2.withColumn("__p", partRoute(partCol)), m)
-            .hint("rebalance", col("__p")),
-          m, fs, dir)
-        staged = listStaged(fs, dir, rel)
-        // NULL-partition gate on the STAGED data — one pass, no query
-        // re-execution (a driver-side pre-check would run the source
-        // twice, and a non-deterministic source could pass the check
-        // yet write NULLs). The staged dir listing is ground truth.
-        if (staged.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"))
-          sys.error(s"batch writes NULL into partition column $partCol " +
-            s"(staged at $dir — unreferenced, vacuum reclaims it)")
-        stagedUnder = Some((m.colmap, m.dropped, identSnap))
-      }
-      val stagedByPart = staged.groupBy(_._1)
-        .map { case (p, fls) => p -> fls.map(_._2).sorted }
-      // overwrite replaces every partition (legacy keys and their tags
-      // leave with it) — only the append merge can collide
-      if (!overwrite)
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys)
-      val files =
-        if (overwrite) stagedByPart
-        else m.files ++ stagedByPart.map { case (p, fls) =>
-          p -> (m.files.getOrElse(p, Nil) ++ fls).sorted
+        val version = nextVersion(fs, bp, m.version)
+        if (attempt == 0) enforceConstraints(rows1, m, base)
+        val identSnap = m.props.filter(_._1.startsWith(IdentityHighWaterPrefix))
+        if (staged.isEmpty ||
+            !stagedUnder.contains((m.colmap, m.dropped, identSnap))) {
+          val rel =
+            s"data/b${batchId}v$version-${java.util.UUID.randomUUID.toString.take(8)}"
+          val dir = new Path(bp, rel)
+          val (rows2, hwUpd) = applyIdentity(rows1, m, enforceAlways = true)
+          stagedHw = hwUpd
+          // REBALANCE by partition value before the write (guide §6, same
+          // as the merge path): without it an append fans out as (source
+          // tasks × partition values) files. Appends record no per-file
+          // column stats (no statsCols parameter exists here), so no
+          // pruning geometry is disturbed; identity values are
+          // content-hash-sharded and partitioning-independent. Cross-batch
+          // fragmentation still accrues (each append commits its own
+          // files) — compaction keeps its job. Bucketed tables skip the
+          // hint: [[stagePartitioned]] already shuffles them by bucket.
+          val routed = toPhysical(rows2.withColumn("__p", partRoute(partCol)), m)
+          stagePartitioned(
+            if (m.bucketSpec.isEmpty) routed.hint("rebalance", col("__p"))
+            else routed,
+            m, fs, dir)
+          staged = listStaged(fs, dir, rel)
+          // NULL-partition gate on the STAGED data — one pass, no query
+          // re-execution (a driver-side pre-check would run the source
+          // twice, and a non-deterministic source could pass the check
+          // yet write NULLs). The staged dir listing is ground truth.
+          if (staged.exists(_._1 == "__HIVE_DEFAULT_PARTITION__"))
+            sys.error(s"batch writes NULL into partition column $partCol " +
+              s"(staged at $dir — unreferenced, vacuum reclaims it)")
+          stagedUnder = Some((m.colmap, m.dropped, identSnap))
         }
-      val next = Manifest(
-        version,
-        files,
-        (if (overwrite) Map.empty[String, Map[String, (String, String)]]
-         else m.stats) ++ sizeStats(spark, fs, bp, staged),
-        if (overwrite) Map.empty else m.blooms,
-        if (overwrite) Map.empty else m.dvs,
-        // legacy tables (no schema header) with surviving old files stay
-        // legacy — a header built from the batch alone could hide columns
-        // those files carry (same rule as upsertBatch)
-        if (!overwrite && m.schemaJson.isEmpty && m.files.nonEmpty) None
-        else evolveSchema(if (overwrite) None else m.schemaJson,
-          org.apache.spark.sql.types.StructType(fields.toArray)),
-        Some(if (overwrite) "OVERWRITE" else "APPEND"),
-        m.constraints,
-        m.txns ++ allTxns,
-        // propsAdd: caller-supplied property seeds (the DSv2 write
-        // surface stamps PartColProp on first write) — existing values
-        // win so a concurrent ALTER is never silently undone. REPLACE
-        // (resetColumnState) inverts that: its propsAdd is an explicit
-        // DECLARATION that overrides collisions in the same commit
-        // (undeclared existing props — bookkeeping high-waters, row-id
-        // bases — still survive, the documented REPLACE semantics)
-        (if (resetColumnState)
-          m.props ++ genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd
-         else (genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd) ++
-           m.props) ++ stagedHw, m.colmap, m.dropped)
-      // the replaced snapshot's CDF delete feed must read the OLD
-      // files under their OWN column mapping — keep the unstripped
-      // manifest for it
-      if (tryCommit(fs, bp, next)) { committedV = version; replacedM = Some(m0Read) }
-      attempt += 1
+        val byPart = stagedByPart(staged)
+        // overwrite replaces every partition (legacy keys and their tags
+        // leave with it) — only the append merge can collide
+        if (!overwrite)
+          requireNoLegacyCollision(m, partCol, byPart.keys)
+        val files =
+          if (overwrite) byPart
+          else m.files ++ byPart.map { case (p, fls) =>
+            p -> (m.files.getOrElse(p, Nil) ++ fls).sorted
+          }
+        val next = Manifest(
+          version,
+          files,
+          (if (overwrite) Map.empty[String, Map[String, (String, String)]]
+           else m.stats) ++ sizeStats(spark, fs, bp, staged),
+          if (overwrite) Map.empty else m.blooms,
+          if (overwrite) Map.empty else m.dvs,
+          // legacy tables (no schema header) with surviving old files stay
+          // legacy — a header built from the batch alone could hide columns
+          // those files carry (same rule as upsertBatch)
+          if (!overwrite && m.schemaJson.isEmpty && m.files.nonEmpty) None
+          else evolveSchema(if (overwrite) None else m.schemaJson,
+            org.apache.spark.sql.types.StructType(fields.toArray)),
+          Some(if (overwrite) "OVERWRITE" else "APPEND"),
+          m.constraints,
+          m.txns ++ allTxns,
+          // propsAdd: caller-supplied property seeds (the DSv2 write
+          // surface stamps PartColProp on first write) — existing values
+          // win so a concurrent ALTER is never silently undone. REPLACE
+          // (resetColumnState) inverts that: its propsAdd is an explicit
+          // DECLARATION that overrides collisions in the same commit
+          // (undeclared existing props — bookkeeping high-waters, row-id
+          // bases — still survive, the documented REPLACE semantics)
+          (if (resetColumnState)
+            m.props ++ genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd
+           else (genTzStamp(spark, m.props ++ propsAdd, partCol) ++ propsAdd) ++
+             m.props) ++ stagedHw, m.colmap, m.dropped)
+        Commit(next, {
+          if (cdfOn) publishCdf(version, m0Read)
+          version
+        })
+      }
     }
-    if (committedV < 0) throw new IllegalStateException(
-      s"SnapshotLog append lost $maxRetries races on $base — raise maxRetries")
-    if (cdfOn) {
-      // every staged row is an INSERT; an overwrite additionally emits
-      // the replaced snapshot's rows as typed deletes (Delta CDF
-      // semantics for INSERT OVERWRITE)
-      val stagedAbs = staged.map { case (_, rel, _) =>
-        new Path(bp, rel).toString }
-      val ins = spark.read.parquet(stagedAbs: _*)
-        .select(fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-        .withColumn("change_type", lit("insert"))
-      val feed = replacedM.filter(_ => overwrite)
-        .filter(_.files.nonEmpty)
-        .map { pm =>
-          readSnapshot(spark, bp, pm, None)
-            .select(fields.map(f =>
-              if (pm.schema.exists(_.fieldNames.contains(f.name)) ||
-                pm.schemaJson.isEmpty)
-                col(f.name).cast(f.dataType).as(f.name)
-              else lit(null).cast(f.dataType).as(f.name)): _*)
-            .withColumn("change_type", lit("delete"))
-            .unionByName(ins)
-        }
-        .getOrElse(ins)
-      commitCdfVersion(fs, bp, committedV,
-        feed.withColumn("_commit_version", lit(committedV)))
-    }
-    committedV
   }
 
   /** (partition value, rel file path, byte length) for every parquet
@@ -3445,34 +3478,32 @@ object SnapshotLog {
       spark: SparkSession, base: String, maxRetries: Int = 5): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
+    commitLoop(fs, bp, maxRetries, "SYNC IDENTITY", base) { _ =>
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"$base has no committed version"))
       val idents = m.identityCols
-      if (idents.isEmpty) return 0L
-      val live = read(spark, base).getOrElse(return 0L)
-      val upd = idents.flatMap { case (c, (start, step)) =>
-        if (!live.columns.exists(_.equalsIgnoreCase(c))) None
-        else {
-          val hw = m.identityHighWater(c, start, step)
-          val agg = if (step > 0) max(col(c)) else min(col(c))
-          val row = live.agg(agg.cast("long")).head
-          val bound = if (row.isNullAt(0)) hw else row.getLong(0)
-          val hw2 = if (step > 0) math.max(hw, bound) else math.min(hw, bound)
-          if (hw2 == hw) None
-          else Some(IdentityHighWaterPrefix + c -> hw2.toString)
+      val liveOpt = if (idents.isEmpty) None else read(spark, base)
+      val upd = liveOpt.toSeq.flatMap { live =>
+        idents.flatMap { case (c, (start, step)) =>
+          if (!live.columns.exists(_.equalsIgnoreCase(c))) None
+          else {
+            val hw = m.identityHighWater(c, start, step)
+            val agg = if (step > 0) max(col(c)) else min(col(c))
+            val row = live.agg(agg.cast("long")).head
+            val bound = if (row.isNullAt(0)) hw else row.getLong(0)
+            val hw2 = if (step > 0) math.max(hw, bound) else math.min(hw, bound)
+            if (hw2 == hw) None
+            else Some(IdentityHighWaterPrefix + c -> hw2.toString)
+          }
         }
       }.toMap
-      if (upd.isEmpty) return 0L
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          props = m.props ++ upd, op = Some("SYNC_IDENTITY"))))
-        return version
-      attempt += 1
+      if (upd.isEmpty) Done(0L)
+      else {
+        val version = nextVersion(fs, bp, m.version)
+        Commit(m.copy(version = version,
+          props = m.props ++ upd, op = Some("SYNC_IDENTITY")), version)
+      }
     }
-    throw new IllegalStateException(
-      s"SYNC IDENTITY lost $maxRetries commit races on $base")
   }
 
   /** `FSCK REPAIR TABLE` (Delta's verb): drop manifest entries whose
@@ -3490,30 +3521,27 @@ object SnapshotLog {
       maxRetries: Int = 5): Seq[String] = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
+    commitLoop(fs, bp, maxRetries, "FSCK", base) { _ =>
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"$base has no committed version"))
       val gone = m.allFiles.filterNot { f =>
         val p = new Path(f)
         fs.exists(if (p.isAbsolute) p else new Path(bp, f))
       }
-      if (gone.isEmpty || dryRun) return gone
-      val goneSet = gone.toSet
-      val files2 = m.files.view.mapValues(_.filterNot(goneSet)).toMap
-        .filter(_._2.nonEmpty)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
+      if (gone.isEmpty || dryRun) Done(gone)
+      else {
+        val goneSet = gone.toSet
+        val files2 = m.files.view.mapValues(_.filterNot(goneSet)).toMap
+          .filter(_._2.nonEmpty)
+        val version = nextVersion(fs, bp, m.version)
+        Commit(m.copy(version = version,
           files = files2,
           stats = m.stats -- gone,
           blooms = m.blooms -- gone,
           dvs = m.dvs -- gone,
-          op = Some("FSCK"))))
-        return gone
-      attempt += 1
+          op = Some("FSCK")), gone)
+      }
     }
-    throw new IllegalStateException(
-      s"FSCK lost $maxRetries commit races on $base")
   }
 
   /** ANALYZE for the commit log: compute per-file bounds (+ the row
@@ -3533,60 +3561,57 @@ object SnapshotLog {
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return 0L)
-      // manifest stats keys are PHYSICAL column names; callers speak
-      // logical (column mapping)
-      val physCols = statsCols.map(m.phys)
-      val wanted = physCols :+ RowCountKey
-      val need = m.allFiles.filter { f =>
-        val have = m.stats.getOrElse(f, Map.empty)
-        !wanted.forall(have.contains)
-      }
-      // ANALYZE is also the legacy-table upgrade path: backfill the
-      // per-file byte length (one status RPC per MISSING file — the
-      // recovery cost newer writers never pay, they record it from the
-      // staging listing) and the schema header (from the footer
-      // mergeSchema read this pass does anyway), so planning on this
-      // table becomes O(manifest) from here on.
-      val needSize = m.allFiles.filterNot(f =>
-        m.stats.get(f).exists(_.contains(ByteSizeKey)))
-      if (need.isEmpty && needSize.isEmpty && m.schemaJson.nonEmpty) return 0L
-      val byPath = need
-        .map(f => fs.makeQualified(new Path(bp, f)).toUri.getPath -> f).toMap
-      val aggs = statsAggs(physCols)
-      val fresh =
-        if (need.isEmpty) Map.empty[String, Map[String, (String, String)]]
-        else spark.read.option("mergeSchema", "true")
-          .parquet(need.map(f => new Path(bp, f).toString): _*)
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().flatMap { r =>
-            byPath.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath)
-              .map(_ -> decodeBounds(r, physCols))
+    commitLoop(fs, bp, maxRetries, "stats build", base) { _ =>
+      withManifest(fs, bp, 0L) { m =>
+        // manifest stats keys are PHYSICAL column names; callers speak
+        // logical (column mapping)
+        val physCols = statsCols.map(m.phys)
+        val wanted = physCols :+ RowCountKey
+        val need = m.allFiles.filter { f =>
+          val have = m.stats.getOrElse(f, Map.empty)
+          !wanted.forall(have.contains)
+        }
+        // ANALYZE is also the legacy-table upgrade path: backfill the
+        // per-file byte length (one status RPC per MISSING file — the
+        // recovery cost newer writers never pay, they record it from the
+        // staging listing) and the schema header (from the footer
+        // mergeSchema read this pass does anyway), so planning on this
+        // table becomes O(manifest) from here on.
+        val needSize = m.allFiles.filterNot(f =>
+          m.stats.get(f).exists(_.contains(ByteSizeKey)))
+        if (need.isEmpty && needSize.isEmpty && m.schemaJson.nonEmpty) Done(0L)
+        else {
+          val byPath = need
+            .map(f => fs.makeQualified(new Path(bp, f)).toUri.getPath -> f).toMap
+          val aggs = statsAggs(physCols)
+          val fresh =
+            if (need.isEmpty) Map.empty[String, Map[String, (String, String)]]
+            else spark.read.option("mergeSchema", "true")
+              .parquet(need.map(f => new Path(bp, f).toString): _*)
+              .groupBy(input_file_name().as("__f"))
+              .agg(aggs.head, aggs.tail: _*)
+              .collect().flatMap { r =>
+                byPath.get(new Path(new java.net.URI(r.getString(0))).toUri.getPath)
+                  .map(_ -> decodeBounds(r, physCols))
+              }.toMap
+          val sizes = needSize.map { f =>
+            val len = fs.getFileStatus(new Path(bp, f)).getLen.toString
+            f -> Map(ByteSizeKey -> (len, len))
           }.toMap
-      val sizes = needSize.map { f =>
-        val len = fs.getFileStatus(new Path(bp, f)).getLen.toString
-        f -> Map(ByteSizeKey -> (len, len))
-      }.toMap
-      val merged = mergeFileStats(sizes, fresh).foldLeft(m.stats) {
-        case (acc, (f, b)) => acc.updated(f, acc.getOrElse(f, Map.empty) ++ b)
+          val merged = mergeFileStats(sizes, fresh).foldLeft(m.stats) {
+            case (acc, (f, b)) => acc.updated(f, acc.getOrElse(f, Map.empty) ++ b)
+          }
+          val schemaJson = m.schemaJson.orElse {
+            try Some(StructTypeNullable(spark.read.option("mergeSchema", "true")
+              .parquet(m.allFiles.map(f => new Path(bp, f).toString): _*).schema))
+            catch { case _: Exception => None }
+          }
+          val version = nextVersion(fs, bp, m.version)
+          Commit(m.copy(version = version, stats = merged,
+            schemaJson = schemaJson, op = Some("STATS")), version)
+        }
       }
-      val schemaJson = m.schemaJson.orElse {
-        try Some(StructTypeNullable(spark.read.option("mergeSchema", "true")
-          .parquet(m.allFiles.map(f => new Path(bp, f).toString): _*).schema))
-        catch { case _: Exception => None }
-      }
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp,
-          Manifest(version, m.files, merged, m.blooms, m.dvs, schemaJson,
-            Some("STATS"), m.constraints, m.txns, m.props, m.colmap, m.dropped)))
-        return version
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"stats build lost $maxRetries commit races on $base")
   }
 
   /** A schema's JSON with every field nullable — the manifest-header
@@ -3674,21 +3699,18 @@ object SnapshotLog {
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return 0L)
-      val files = m.allFiles
-      if (files.isEmpty) return 0L
-      val built = computeBlooms(spark, fs, bp, files, cols.map(m.phys), fpp)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp,
-          m.copy(version = version, blooms = m.blooms ++ built,
-            op = Some("BLOOMS"))))
-        return version
-      attempt += 1
+    commitLoop(fs, bp, maxRetries, "bloom build", base) { _ =>
+      withManifest(fs, bp, 0L) { m =>
+        val files = m.allFiles
+        if (files.isEmpty) Done(0L)
+        else {
+          val built = computeBlooms(spark, fs, bp, files, cols.map(m.phys), fpp)
+          val version = nextVersion(fs, bp, m.version)
+          Commit(m.copy(version = version, blooms = m.blooms ++ built,
+            op = Some("BLOOMS")), version)
+        }
+      }
     }
-    throw new IllegalStateException(
-      s"bloom build lost $maxRetries commit races on $base")
   }
 
   /** `RENAME COLUMN from → to` as a METADATA-ONLY commit via column
@@ -3713,12 +3735,8 @@ object SnapshotLog {
       to: String,
       partCol: Option[String] = None,
       maxRetries: Int = 5): Long = {
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"no committed version at $base"))
+    alterTable(spark, base, maxRetries, "RENAME COLUMN",
+        Some(s"no committed version at $base")) { (m, version) =>
       val sc = m.schema.getOrElse(sys.error(
         "RENAME COLUMN needs a schema header (legacy manifest) — any " +
           "write, or ANALYZE … COMPUTE STATISTICS, records one first"))
@@ -3751,15 +3769,10 @@ object SnapshotLog {
         if (f.name == field.name) f.copy(name = to) else f))
       val colmap = (m.colmap - field.name) ++
         (if (phys == to) Map.empty[String, String] else Map(to -> phys))
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           schemaJson = Some(StructTypeNullable(evolved)),
-          op = Some("RENAME_COLUMN"), colmap = colmap)))
-        return version
-      attempt += 1
+          op = Some("RENAME_COLUMN"), colmap = colmap)
     }
-    throw new IllegalStateException(
-      s"RENAME COLUMN lost $maxRetries commit races on $base")
   }
 
   /** `DROP COLUMN c` as a METADATA-ONLY commit: the logical schema
@@ -3780,12 +3793,8 @@ object SnapshotLog {
       name: String,
       partCol: Option[String] = None,
       maxRetries: Int = 5): Long = {
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"no committed version at $base"))
+    alterTable(spark, base, maxRetries, "DROP COLUMN",
+        Some(s"no committed version at $base")) { (m, version) =>
       val sc = m.schema.getOrElse(sys.error(
         "DROP COLUMN needs a schema header (legacy manifest) — any " +
           "write, or ANALYZE … COMPUTE STATISTICS, records one first"))
@@ -3811,17 +3820,12 @@ object SnapshotLog {
           s"(UNSET $IdentityPrefix${field.name} first)")
       val evolved = org.apache.spark.sql.types.StructType(
         sc.fields.filterNot(_.name == field.name))
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           schemaJson = Some(StructTypeNullable(evolved)),
           op = Some("DROP_COLUMN"),
           colmap = m.colmap - field.name,
-          dropped = m.dropped + m.phys(field.name))))
-        return version
-      attempt += 1
+          dropped = m.dropped + m.phys(field.name))
     }
-    throw new IllegalStateException(
-      s"DROP COLUMN lost $maxRetries commit races on $base")
   }
 
   /** `ALTER COLUMN c TYPE t` as a METADATA-ONLY commit, WIDENING
@@ -3865,12 +3869,8 @@ object SnapshotLog {
         td.scale == fd.scale && td.precision > fd.precision
       case _ => false
     }
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"no committed version at $base"))
+    alterTable(spark, base, maxRetries, "ALTER COLUMN TYPE",
+        Some(s"no committed version at $base")) { (m, version) =>
       val sc = m.schema.getOrElse(sys.error(
         "ALTER COLUMN TYPE needs a schema header (legacy manifest) — any " +
           "write, or ANALYZE … COMPUTE STATISTICS, records one first"))
@@ -3905,16 +3905,11 @@ object SnapshotLog {
       val blooms2 =
         if (integral) m.blooms
         else m.blooms.map { case (f, cs) => f -> (cs - phys) }
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           schemaJson = Some(StructTypeNullable(evolved)),
           op = Some("ALTER_COLUMN_TYPE"),
-          stats = stats2, blooms = blooms2)))
-        return version
-      attempt += 1
+          stats = stats2, blooms = blooms2)
     }
-    throw new IllegalStateException(
-      s"ALTER COLUMN TYPE lost $maxRetries commit races on $base")
   }
 
   /** `TRUNCATE TABLE` — delete every row as ONE metadata-only commit:
@@ -3932,27 +3927,24 @@ object SnapshotLog {
       maxRetries: Int = 5): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
+    commitLoop(fs, bp, maxRetries, "TRUNCATE", base) { _ =>
       val m = readManifest(fs, bp).getOrElse(
         sys.error(s"no committed version at $base"))
-      if (m.allFiles.isEmpty) return m.version
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          files = Map.empty, stats = Map.empty, blooms = Map.empty,
-          dvs = Map.empty, op = Some("TRUNCATE")))) {
-        if (m.cdfEnabled) {
-          val pre = alignToSchema(readFiles(spark, bp, m, m.allFiles), m)
-          commitCdfVersion(fs, bp, version,
-            pre.withColumn("change_type", lit("delete"))
-              .withColumn("_commit_version", lit(version)))
-        }
-        return version
+      if (m.allFiles.isEmpty) Done(m.version)
+      else {
+        val version = nextVersion(fs, bp, m.version)
+        Commit(m.copy(version = version,
+            files = Map.empty, stats = Map.empty, blooms = Map.empty,
+            dvs = Map.empty, op = Some("TRUNCATE")), {
+          if (m.cdfEnabled) {
+            val pre = alignToSchema(readFiles(spark, bp, m, m.allFiles), m)
+            commitCdfVersion(fs, bp, version,
+              pre.withColumn("change_type", lit("delete")))
+          }
+          version
+        })
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"TRUNCATE lost $maxRetries commit races on $base")
   }
 
   /** Names of CHECK constraints whose SQL text references column `c`
@@ -4106,92 +4098,86 @@ object SnapshotLog {
     // file (re-layout changes pruning, not just file counts).
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return 0L)
-      val files = m.files.getOrElse(part, Nil)
-      val hasDv = files.exists(m.dvs.contains)
-      // a single file WITH a deletion vector still compacts: that is
-      // how merge-on-read deletes are materialized back into a clean
-      // file layout
-      if (files.isEmpty || (clusterBy.isEmpty && !hasDv &&
-          (if (m.bucketSpec.isDefined)
-            // budget-aware: a bucket target-split by OPTIMIZE is steady
-            // state — folding it back to one file would ping-pong with
-            // the next target-size pass
-            bucketsCompact(files, manifestBytesOf(m), optimizeTargetOf(m))
-           else files.size <= 1)))
-        return 0L
-      val version = nextVersion(fs, bp, m.version)
-      // staging dir unique per attempt AND partition: two concurrent
-      // compactions reading the same manifest compute the same target
-      // version — keyed only by version they would overwrite each
-      // other's staged (possibly already-committed) files
-      val rel =
-        s"data/c$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-      val dir = new Path(bp, rel)
-      // read THROUGH deletion vectors: compaction materializes them —
-      // deleted positions vanish physically and the DV refs drop
-      // align to the LOGICAL schema: a rewrite materializes dropped
-      // columns' removal (their tombstoned physical names must not be
-      // re-staged) and backfills added-but-never-written columns.
-      // Row-tracked tables also carry their ids into the rewrite as
-      // the materialized column — OPTIMIZE must not reassign identity
-      val df = readForRewrite(spark, bp, m, files)
-      require(clusterBy.isEmpty || m.bucketSpec.isEmpty,
-        "clusterBy/ZORDER is incompatible with a bucketed table")
-      if (m.bucketSpec.isDefined)
-        // each bucket's accumulated files fold to ONE tagged file;
-        // rows never cross buckets
-        stageFlatBucketed(toPhysical(df, m), m, fs, dir)
-      else {
-      val out =
-        if (clusterBy.isEmpty) df.repartition(1)
+    commitLoop(fs, bp, maxRetries, "compaction", s"$base/$part") { attempt =>
+      withManifest(fs, bp, 0L) { m =>
+        val files = m.files.getOrElse(part, Nil)
+        val hasDv = files.exists(m.dvs.contains)
+        // a single file WITH a deletion vector still compacts: that is
+        // how merge-on-read deletes are materialized back into a clean
+        // file layout
+        if (files.isEmpty || (clusterBy.isEmpty && !hasDv &&
+            (if (m.bucketSpec.isDefined)
+              // budget-aware: a bucket target-split by OPTIMIZE is steady
+              // state — folding it back to one file would ping-pong with
+              // the next target-size pass
+              bucketsCompact(files, manifestBytesOf(m), optimizeTargetOf(m))
+             else files.size <= 1)))
+          Done(0L)
         else {
-          val (d2, sortCol) =
-            if (clusterBy.size == 1) (df, col(clusterBy.head))
-            else (Clustering.withZ(df, clusterBy), col("__z"))
-          d2.repartitionByRange(math.max(clusterFiles, 1), sortCol)
-            .sortWithinPartitions(sortCol)
-            .drop("__z")
+          val version = nextVersion(fs, bp, m.version)
+          // staging dir unique per attempt AND partition: two concurrent
+          // compactions reading the same manifest compute the same target
+          // version — keyed only by version they would overwrite each
+          // other's staged (possibly already-committed) files
+          val rel =
+            s"data/c$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
+          val dir = new Path(bp, rel)
+          // read THROUGH deletion vectors: compaction materializes them —
+          // deleted positions vanish physically and the DV refs drop
+          // align to the LOGICAL schema: a rewrite materializes dropped
+          // columns' removal (their tombstoned physical names must not be
+          // re-staged) and backfills added-but-never-written columns.
+          // Row-tracked tables also carry their ids into the rewrite as
+          // the materialized column — OPTIMIZE must not reassign identity
+          val df = readForRewrite(spark, bp, m, files)
+          require(clusterBy.isEmpty || m.bucketSpec.isEmpty,
+            "clusterBy/ZORDER is incompatible with a bucketed table")
+          if (m.bucketSpec.isDefined)
+            // each bucket's accumulated files fold to ONE tagged file;
+            // rows never cross buckets
+            stageFlatBucketed(toPhysical(df, m), m, fs, dir)
+          else {
+          val out =
+            if (clusterBy.isEmpty) df.repartition(1)
+            else {
+              val (d2, sortCol) =
+                if (clusterBy.size == 1) (df, col(clusterBy.head))
+                else (Clustering.withZ(df, clusterBy), col("__z"))
+              d2.repartitionByRange(math.max(clusterFiles, 1), sortCol)
+                .sortWithinPartitions(sortCol)
+                .drop("__z")
+            }
+          toPhysical(out, m).write.mode("overwrite").parquet(dir.toString)
+          }
+          val newStatuses = fs.listStatus(dir).toSeq
+            .filter(_.getPath.getName.endsWith(".parquet"))
+          val newFiles = newStatuses.map(st => s"$rel/${st.getPath.getName}")
+          val newSizes = sizeStats(spark, fs, bp,
+            newStatuses.map(st => (part, s"$rel/${st.getPath.getName}", st.getLen)))
+          // compacted-away files take their stats entries with them; the
+          // replacement file gets fresh bounds when statsCols is passed,
+          // and is otherwise stats-less (conservative: never pruned)
+          val newStats =
+            if (statsCols.isEmpty) Map.empty[String, Map[String, (String, String)]]
+            else fileStats(spark, fs, dir, rel,
+              statsCols.filterNot(m.dropped.contains))
+          // blooms SURVIVE maintenance: rebuild over exactly the columns
+          // the replaced files carried blooms for, so point-lookup
+          // skipping keeps working after OPTIMIZE (a dropped-only bloom
+          // would silently degrade every future probe to scan-all)
+          val bloomCols = files.flatMap(f =>
+            m.blooms.getOrElse(f, Map.empty).keys).distinct
+            // a dropped column's bloom cannot rebuild (its bytes are gone
+            // from the rewrite) — and is pointless, nothing queries it
+            .filterNot(m.dropped.contains)
+          val newBlooms = computeBlooms(spark, fs, bp, newFiles, bloomCols, 0.03)
+          Commit(m.copy(version = version, files = m.files.updated(part, newFiles),
+            stats = (m.stats -- files) ++ mergeFileStats(newSizes, newStats),
+            blooms = (m.blooms -- files) ++ newBlooms, dvs = m.dvs -- files,
+            op = Some(if (clusterBy.isEmpty) "COMPACT" else "OPTIMIZE")), version)
         }
-      toPhysical(out, m).write.mode("overwrite").parquet(dir.toString)
       }
-      val newStatuses = fs.listStatus(dir).toSeq
-        .filter(_.getPath.getName.endsWith(".parquet"))
-      val newFiles = newStatuses.map(st => s"$rel/${st.getPath.getName}")
-      val newSizes = sizeStats(spark, fs, bp,
-        newStatuses.map(st => (part, s"$rel/${st.getPath.getName}", st.getLen)))
-      // compacted-away files take their stats entries with them; the
-      // replacement file gets fresh bounds when statsCols is passed,
-      // and is otherwise stats-less (conservative: never pruned)
-      val newStats =
-        if (statsCols.isEmpty) Map.empty[String, Map[String, (String, String)]]
-        else fileStats(spark, fs, dir, rel,
-          statsCols.filterNot(m.dropped.contains))
-      // blooms SURVIVE maintenance: rebuild over exactly the columns
-      // the replaced files carried blooms for, so point-lookup
-      // skipping keeps working after OPTIMIZE (a dropped-only bloom
-      // would silently degrade every future probe to scan-all)
-      val bloomCols = files.flatMap(f =>
-        m.blooms.getOrElse(f, Map.empty).keys).distinct
-        // a dropped column's bloom cannot rebuild (its bytes are gone
-        // from the rewrite) — and is pointless, nothing queries it
-        .filterNot(m.dropped.contains)
-      val newBlooms = computeBlooms(spark, fs, bp, newFiles, bloomCols, 0.03)
-      if (tryCommit(fs, bp,
-          Manifest(version, m.files.updated(part, newFiles),
-            (m.stats -- files) ++ mergeFileStats(newSizes, newStats),
-            (m.blooms -- files) ++ newBlooms,
-            m.dvs -- files,
-            m.schemaJson,
-            Some(if (clusterBy.isEmpty) "COMPACT" else "OPTIMIZE"),
-            m.constraints, m.txns, m.props, m.colmap, m.dropped)))
-        return version
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"compaction lost $maxRetries commit races on $base/$part")
   }
 
   /** Whole-table OPTIMIZE in ONE transaction: every partition that is
@@ -4219,7 +4205,6 @@ object SnapshotLog {
       statsCols: Seq[String] = Nil): Long = {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
-    var attempt = 0
     // CONFLICT-NARROWED retries (the multi-writer soak's OPTIMIZE
     // latency tail was recompute cost, not contention itself): the
     // staged rewrite replaces EXACTLY the files it read, so a lost
@@ -4239,153 +4224,150 @@ object SnapshotLog {
     var stagedDropped: Set[String] = Set.empty
     var stagedSchema: Option[String] = None
     var stagedTarget: Option[Long] = None
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return 0L)
-      requireCurrentLayout(m, partCol)
-      val targetBytes = optimizeTargetOf(m)
-      val canReuse = staged.nonEmpty && {
-        val fset = stagedOld.values.flatten.toSet
-        stagedOld.forall { case (p, fls) =>
-          val live = m.files.getOrElse(p, Nil).toSet
-          fls.forall(live)
-        } &&
-          m.dvs.filter { case (f, _) => fset(f) } == stagedDvs &&
-          m.colmap == stagedColmap && m.dropped == stagedDropped &&
-          m.schemaJson == stagedSchema && targetBytes == stagedTarget
-      }
-      if (!canReuse) {
+    commitLoop(fs, bp, maxRetries, "optimize", base) { attempt =>
+      withManifest(fs, bp, 0L) { m =>
+        requireCurrentLayout(m, partCol)
+        val targetBytes = optimizeTargetOf(m)
+        val canReuse = staged.nonEmpty && {
+          val fset = stagedOld.values.flatten.toSet
+          stagedOld.forall { case (p, fls) =>
+            val live = m.files.getOrElse(p, Nil).toSet
+            fls.forall(live)
+          } &&
+            m.dvs.filter { case (f, _) => fset(f) } == stagedDvs &&
+            m.colmap == stagedColmap && m.dropped == stagedDropped &&
+            m.schemaJson == stagedSchema && targetBytes == stagedTarget
+        }
         // legacy-layout partitions (partition evolution) always
         // qualify: OPTIMIZE re-routes their rows under the CURRENT
         // layout — the incremental migration path that returns the
         // table to a single layout without a dedicated full rewrite
-        val legacy = m.legacyKeys
-        val need = m.files.keySet.toSeq.sorted.filter { p =>
-          val fls = m.files(p)
-          legacy(p) || fls.exists(m.dvs.contains) ||
-            (if (m.bucketSpec.isDefined)
-              // bucketed steady state is one file PER BUCKET — or, with
-              // a byte target, ceil(bucketBytes/target) files; only a
-              // bucket over its budget (or an untagged file) fragments
-              !bucketsCompact(fls, manifestBytesOf(m), targetBytes)
-            else fls.size >= math.max(minFiles, 2))
-        }
-        if (need.isEmpty) return 0L
-        val rel =
-          s"data/o${m.version + 1}-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        val oldFiles = need.flatMap(p => m.files.getOrElse(p, Nil))
-        // one job: read the fragmented partitions through their DVs.
-        // Without a byte target each partition folds to ONE file (hash
-        // distribution routes its rows to one task); with
-        // [[OptimizeTargetProp]] set, a deterministic content-hash salt
-        // splits each partition into ~ceil(bytes/target) output files —
-        // best-effort (salt groups sharing a task merge), bounded by
-        // [1, n]. Partition byte totals come from the manifest's
-        // `__bytes` rollups — pure metadata, no extra scan; a partition
-        // with any size-less legacy file falls back to the single fold.
-        val saltsOf: Map[String, Int] = targetBytes match {
-          case None => Map.empty
-          case Some(t) => need.map { p =>
-            val sizes = m.files(p).flatMap(f =>
-              m.stats.get(f).flatMap(_.get(ByteSizeKey))
-                .flatMap(_._1.toLongOption))
-            p -> (if (sizes.size != m.files(p).size) 1
-                  else math.max(1, math.ceil(sizes.sum.toDouble / t).toInt))
-          }.toMap
-        }
-        val df = readForRewrite(spark, bp, m, oldFiles)
-        val flat = toPhysical(
-          df.withColumn("__p", partRoute(partCol)), m)
-        if (m.bucketSpec.isDefined) {
-          // bucketed OPTIMIZE: re-route by the bucket columns (file
-          // count per partition folds to <= numBuckets, each file one
-          // tagged bucket). With a byte target, buckets whose budget
-          // wants >1 file are soft-split by a content-hash salt into
-          // several files ALL carrying the same bucket tag (which the
-          // bucketed scan groups back into one bucket partition) —
-          // rows still never cross buckets.
-          val saltsPB: Map[String, Int] = targetBytes match {
-            case None => Map.empty
-            case Some(t) => need.iterator.flatMap { p =>
-              m.files(p).groupBy(bucketIdOf).collect {
-                case (Some(bid), g) =>
-                  val sizes = g.flatMap(manifestBytesOf(m)(_))
-                  val k =
-                    if (sizes.size != g.size) 1
-                    else math.max(1, math.ceil(sizes.sum.toDouble / t).toInt)
-                  s"$p\u0000$bid" -> k
-              }.filter(_._2 > 1)
-            }.toMap
+        val need = if (canReuse) Nil else {
+          val legacy = m.legacyKeys
+          m.files.keySet.toSeq.sorted.filter { p =>
+            val fls = m.files(p)
+            legacy(p) || fls.exists(m.dvs.contains) ||
+              (if (m.bucketSpec.isDefined)
+                // bucketed steady state is one file PER BUCKET — or, with
+                // a byte target, ceil(bucketBytes/target) files; only a
+                // bucket over its budget (or an untagged file) fragments
+                !bucketsCompact(fls, manifestBytesOf(m), targetBytes)
+              else fls.size >= math.max(minFiles, 2))
           }
-          if (saltsPB.isEmpty) stagePartitioned(flat, m, fs, dir)
-          else stageBucketedSplit(flat, m, fs, dir, need, saltsPB)
-        } else {
-          val routed =
-            if (saltsOf.values.forall(_ <= 1)) flat.repartition(col("__p"))
-            else {
-              val dataCols = flat.columns.filter(_ != "__p").toSeq
-              // one task per intended output file: an EXPLICIT task
-              // count (AQE would coalesce a tiny exchange back into one
-              // task and undo the split) sized to the file budget,
-              // range-routed so distinct (partition, salt) groups land
-              // in distinct tasks
-              val nTasks = math.max(saltsOf.values.map(_.toLong).sum, 1L)
-                .min(100000L).toInt
-              flat.withColumn("__salt",
-                  pmod(xxhash64(struct(dataCols.map(col): _*)),
-                    coalesce(element_at(typedLit(saltsOf), col("__p")), lit(1))
-                      .cast("long")))
-                .repartitionByRange(nTasks, col("__p"), col("__salt"))
-                .drop("__salt")
-            }
-          routed.write.partitionBy("__p").parquet(dir.toString)
         }
-        staged = listStaged(fs, dir, rel)
-        stagedStatsC =
-          if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, dir, rel,
-            statsCols.filterNot(m.dropped.contains))
-        val bloomCols = oldFiles.flatMap(f =>
-          m.blooms.getOrElse(f, Map.empty).keys).distinct
-          .filterNot(m.dropped.contains)
-        stagedBloomsC = computeBlooms(
-          spark, fs, bp, staged.map(_._2), bloomCols, 0.03)
-        stagedOld = need.iterator.map(p => p -> m.files.getOrElse(p, Nil)).toMap
-        val fset = oldFiles.toSet
-        stagedDvs = m.dvs.filter { case (f, _) => fset(f) }
-        stagedColmap = m.colmap; stagedDropped = m.dropped
-        stagedSchema = m.schemaJson; stagedTarget = targetBytes
+        if (!canReuse && need.isEmpty) Done(0L)
+        else {
+          if (!canReuse) {
+            val rel =
+              s"data/o${m.version + 1}-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
+            val dir = new Path(bp, rel)
+            val oldFiles = need.flatMap(p => m.files.getOrElse(p, Nil))
+            // one job: read the fragmented partitions through their DVs.
+            // Without a byte target each partition folds to ONE file (hash
+            // distribution routes its rows to one task); with
+            // [[OptimizeTargetProp]] set, a deterministic content-hash salt
+            // splits each partition into ~ceil(bytes/target) output files —
+            // best-effort (salt groups sharing a task merge), bounded by
+            // [1, n]. Partition byte totals come from the manifest's
+            // `__bytes` rollups — pure metadata, no extra scan; a partition
+            // with any size-less legacy file falls back to the single fold.
+            val saltsOf: Map[String, Int] = targetBytes match {
+              case None => Map.empty
+              case Some(t) => need.map { p =>
+                val sizes = m.files(p).flatMap(f =>
+                  m.stats.get(f).flatMap(_.get(ByteSizeKey))
+                    .flatMap(_._1.toLongOption))
+                p -> (if (sizes.size != m.files(p).size) 1
+                      else math.max(1, math.ceil(sizes.sum.toDouble / t).toInt))
+              }.toMap
+            }
+            val df = readForRewrite(spark, bp, m, oldFiles)
+            val flat = toPhysical(
+              df.withColumn("__p", partRoute(partCol)), m)
+            if (m.bucketSpec.isDefined) {
+              // bucketed OPTIMIZE: re-route by the bucket columns (file
+              // count per partition folds to <= numBuckets, each file one
+              // tagged bucket). With a byte target, buckets whose budget
+              // wants >1 file are soft-split by a content-hash salt into
+              // several files ALL carrying the same bucket tag (which the
+              // bucketed scan groups back into one bucket partition) —
+              // rows still never cross buckets.
+              val saltsPB: Map[String, Int] = targetBytes match {
+                case None => Map.empty
+                case Some(t) => need.iterator.flatMap { p =>
+                  m.files(p).groupBy(bucketIdOf).collect {
+                    case (Some(bid), g) =>
+                      val sizes = g.flatMap(manifestBytesOf(m)(_))
+                      val k =
+                        if (sizes.size != g.size) 1
+                        else math.max(1, math.ceil(sizes.sum.toDouble / t).toInt)
+                      s"$p\u0000$bid" -> k
+                  }.filter(_._2 > 1)
+                }.toMap
+              }
+              if (saltsPB.isEmpty) stagePartitioned(flat, m, fs, dir)
+              else stageBucketedSplit(flat, m, fs, dir, need, saltsPB)
+            } else {
+              val routed =
+                if (saltsOf.values.forall(_ <= 1)) flat.repartition(col("__p"))
+                else {
+                  val dataCols = flat.columns.filter(_ != "__p").toSeq
+                  // one task per intended output file: an EXPLICIT task
+                  // count (AQE would coalesce a tiny exchange back into one
+                  // task and undo the split) sized to the file budget,
+                  // range-routed so distinct (partition, salt) groups land
+                  // in distinct tasks
+                  val nTasks = math.max(saltsOf.values.map(_.toLong).sum, 1L)
+                    .min(100000L).toInt
+                  flat.withColumn("__salt",
+                      pmod(xxhash64(struct(dataCols.map(col): _*)),
+                        coalesce(element_at(typedLit(saltsOf), col("__p")), lit(1))
+                          .cast("long")))
+                    .repartitionByRange(nTasks, col("__p"), col("__salt"))
+                    .drop("__salt")
+                }
+              routed.write.partitionBy("__p").parquet(dir.toString)
+            }
+            staged = listStaged(fs, dir, rel)
+            stagedStatsC =
+              if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
+              else fileStats(spark, fs, dir, rel,
+                statsCols.filterNot(m.dropped.contains))
+            val bloomCols = oldFiles.flatMap(f =>
+              m.blooms.getOrElse(f, Map.empty).keys).distinct
+              .filterNot(m.dropped.contains)
+            stagedBloomsC = computeBlooms(
+              spark, fs, bp, staged.map(_._2), bloomCols, 0.03)
+            stagedOld = need.iterator.map(p => p -> m.files.getOrElse(p, Nil)).toMap
+            val fset = oldFiles.toSet
+            stagedDvs = m.dvs.filter { case (f, _) => fset(f) }
+            stagedColmap = m.colmap; stagedDropped = m.dropped
+            stagedSchema = m.schemaJson; stagedTarget = targetBytes
+          }
+          // commit against the LIVE manifest: remove exactly the files the
+          // rewrite read (a partition emptied of them drops its key —
+          // migration), keep any racer-appended files, add the staged ones
+          val version = nextVersion(fs, bp, m.version)
+          val oldFiles = stagedOld.values.flatten.toSeq
+          val afterRemoval = stagedOld.foldLeft(m.files) { case (acc, (p, fls)) =>
+            val rest = acc.getOrElse(p, Nil).filterNot(fls.toSet)
+            if (rest.isEmpty) acc - p else acc.updated(p, rest)
+          }
+          val byPart = stagedByPart(staged)
+          // a rewritten LEGACY partition's rows route under the current
+          // layout — splice-append into possibly-untouched partitions
+          requireNoLegacyCollision(m, partCol, byPart.keys,
+            stagedOld.keySet.filterNot(afterRemoval.contains))
+          Commit(m.copy(version = version,
+            files = afterRemoval ++ byPart.map { case (p, fls) =>
+              p -> (afterRemoval.getOrElse(p, Nil) ++ fls).sorted },
+            stats = (m.stats -- oldFiles) ++
+              mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStatsC),
+            blooms = (m.blooms -- oldFiles) ++ stagedBloomsC,
+            dvs = m.dvs -- oldFiles, op = Some("OPTIMIZE")), version)
+        }
       }
-      // commit against the LIVE manifest: remove exactly the files the
-      // rewrite read (a partition emptied of them drops its key —
-      // migration), keep any racer-appended files, add the staged ones
-      val version = nextVersion(fs, bp, m.version)
-      val oldFiles = stagedOld.values.flatten.toSeq
-      val afterRemoval = stagedOld.foldLeft(m.files) { case (acc, (p, fls)) =>
-        val rest = acc.getOrElse(p, Nil).filterNot(fls.toSet)
-        if (rest.isEmpty) acc - p else acc.updated(p, rest)
-      }
-      val stagedByPart = staged.groupBy(_._1)
-        .map { case (p, fls) => p -> fls.map(_._2).sorted }
-      // a rewritten LEGACY partition's rows route under the current
-      // layout — splice-append into possibly-untouched partitions
-      requireNoLegacyCollision(m, partCol, stagedByPart.keys,
-        stagedOld.keySet.filterNot(afterRemoval.contains))
-      val next = Manifest(
-        version,
-        afterRemoval ++ stagedByPart.map { case (p, fls) =>
-          p -> (afterRemoval.getOrElse(p, Nil) ++ fls).sorted },
-        (m.stats -- oldFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStatsC),
-        (m.blooms -- oldFiles) ++ stagedBloomsC,
-        m.dvs -- oldFiles,
-        m.schemaJson,
-        Some("OPTIMIZE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-      onBeforeOptimizeCommit()
-      if (tryCommit(fs, bp, next)) return version
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"optimize lost $maxRetries commit races on $base")
   }
 
   /** What a [[deleteWhere]]/[[updateWhere]] did: the committed version
@@ -4421,6 +4403,80 @@ object SnapshotLog {
   final case class PlanPredicate(
       matches: DataFrame => DataFrame,
       keeps: DataFrame => DataFrame)
+
+  /** The row selectors of a DML condition: a [[PlanPredicate]]
+    * (subquery conditions) as given, else the Column `predicate`'s —
+    * TRUE rows match, FALSE and NULL rows keep. */
+  private def selectors(
+      predicate: Column, matcher: Option[PlanPredicate]): PlanPredicate =
+    matcher.getOrElse(PlanPredicate(
+      _.filter(predicate), _.filter(!coalesce(predicate, lit(false)))))
+
+  /** `df` aligned to `to` by name — conform, not cast: tolerates
+    * nullability-only differences and struct-arity gaps from nested
+    * add-column evolution. A USER BATCH aligns `strict`: an extra
+    * nested subfield the target lacks errors instead of silently
+    * discarding its data; the table's own files align non-strict. */
+  private def align(
+      df: DataFrame, to: org.apache.spark.sql.types.StructType,
+      strict: Boolean = false): DataFrame =
+    df.select(to.fields.toSeq.map(f => conformTo(df, f, strict)): _*)
+
+  /** A [[commitLoop]] attempt over the live manifest; a table with no
+    * committed version answers `absent` without committing. */
+  private def withManifest[A](fs: FileSystem, bp: Path, absent: => A)(
+      f: Manifest => Attempt[A]): Attempt[A] =
+    readManifest(fs, bp).fold[Attempt[A]](Done(absent))(f)
+
+  /** A DML attempt over `m`'s rows. Row ids are read-side identity
+    * metadata — a rewrite that let them into the staged frame (or a
+    * legacy schema backfill) would turn them into a data column. A
+    * version gone from under us answers None. */
+  private def withLiveRows(spark: SparkSession, base: String, m: Manifest)(
+      f: DataFrame => Attempt[Option[DmlOutcome]]): Attempt[Option[DmlOutcome]] =
+    readVersion(spark, base, m.version).map(_.drop(RowIdCol))
+      .fold[Attempt[Option[DmlOutcome]]](Done(None))(f)
+
+  /** The partition-rewrite step DELETE (row path), REPLACE WHERE and
+    * UPDATE share: stage `out` — every surviving and new row of the
+    * `affected` partitions — under a directory unique to this attempt,
+    * splice it over them ([[spliceStaged]]) and propose the commit.
+    * `cdf` publishes the change feed once the commit has won. An
+    * affected partition the rewrite left empty vanishes from the
+    * manifest and reports as dropped; the rest report as rewritten. */
+  private def rewritePartitions(
+      spark: SparkSession, fs: FileSystem, bp: Path, m: Manifest,
+      version: Long, attempt: Int, tag: String, partCol: String,
+      statsCols: Seq[String], out: DataFrame,
+      liveSchema: org.apache.spark.sql.types.StructType,
+      affected: Seq[String], op: String, txn: Option[(String, Long)] = None)(
+      cdf: => Unit): Attempt[Option[DmlOutcome]] = {
+    val rel =
+      s"data/$tag$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
+    val dir = new Path(bp, rel)
+    stagePartitioned(
+      toPhysical(out.withColumn("__p", partRoute(partCol)), m), m, fs, dir)
+    val staged = listStaged(fs, dir, rel)
+    val stagedParts = staged.map(_._1).toSet
+    // survivors of a rewritten LEGACY partition restaged under the
+    // current layout (migration) — splice-append, never replace an
+    // untouched partition's entry
+    requireNoLegacyCollision(m, partCol, stagedParts, affected.toSet)
+    val stagedStats =
+      if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
+      else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
+    val next = spliceStaged(spark, fs, bp, m, version, affected, staged,
+      stagedStats).copy(
+      // this pass read the whole live table, so a legacy manifest
+      // gets its schema header backfilled for free
+      schemaJson = m.schemaJson.orElse(Some(StructTypeNullable(liveSchema))),
+      op = Some(op), txns = m.txns ++ txn)
+    Commit(next, {
+      cdf
+      Some(DmlOutcome(version, metadataOnly = false,
+        affected.filterNot(stagedParts), affected.filter(stagedParts)))
+    })
+  }
 
   /** DELETE every row where `predicate` is TRUE (SQL semantics: FALSE
     * and NULL rows stay) and commit the result as a new version.
@@ -4483,14 +4539,8 @@ object SnapshotLog {
     val pcs = partColsOf(partCol)
     lazy val partTypes = pcs.map(c =>
       live0.schema(live0.schema.fieldIndex(c)).dataType)
-    // every predicate evaluation goes through these two: a Column
-    // predicate filters directly; a [[PlanPredicate]] (subquery
-    // conditions) delegates to its plan-level selectors
-    def matchRows(df: DataFrame): DataFrame =
-      matcher.map(_.matches(df)).getOrElse(df.filter(predicate))
-    def keepRows(df: DataFrame): DataFrame =
-      matcher.map(_.keeps(df))
-        .getOrElse(df.filter(!coalesce(predicate, lit(false))))
+    // every predicate evaluation goes through these two selectors
+    val sel = selectors(predicate, matcher)
     // partition-only iff the ANALYZED predicate references partCol
     // alone. The probe frame carries the FULL live schema as typed
     // nulls (emptyDataFrame-derived, so no scan): with every real
@@ -4506,7 +4556,7 @@ object SnapshotLog {
       // plan's columns are its own), so `o_year IN (SELECT …)` still
       // qualifies for the metadata fast path while a correlated
       // predicate touching a data column forces the row path
-      val probe = matchRows(spark.emptyDataFrame.select(
+      val probe = sel.matches(spark.emptyDataFrame.select(
         live0.schema.fields.toSeq.map(f =>
           lit(null).cast(f.dataType).as(f.name)): _*))
       val refs = probe.queryExecution.analyzed.collectFirst {
@@ -4523,219 +4573,173 @@ object SnapshotLog {
       else refs.forall(r => pcs.exists(_.equalsIgnoreCase(r)))
     }
 
-    // conform, not cast: tolerates nullability-only differences and
-    // struct-arity gaps from nested add-column evolution
-    def align(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(to.fields.toSeq.map(f => conformTo(df, f)): _*)
-    def absFiles(m: Manifest, parts: Seq[String]): Seq[String] =
-      parts.flatMap(p => m.files.getOrElse(p, Nil))
-        .map(f => new Path(bp, f).toString)
-
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return None)
-      requireCurrentLayout(m, partCol)
-      val version = nextVersion(fs, bp, m.version)
-      // mixed-layout tables (partition evolution) skip the
-      // partition-metadata fast path: legacy keys do not decompose
-      // under the current layout, and matching rows inside legacy
-      // partitions need a row-level plan anyway (the DV path below
-      // stays valid — deletion vectors are file-level)
-      if (partitionOnly && m.legacyKeys.isEmpty) {
-        // evaluate against the manifest's partition values only
-        val parts = m.files.keySet.toSeq.sorted
-        val dropped = {
-          val pdf0 = spark.createDataset(parts)(org.apache.spark.sql.Encoders.STRING)
-            .toDF("__pv")
-          // unpartitioned: the predicate is constant (refs empty), so
-          // no typed partition column to materialize
-          val pdf =
-            if (pcs.isEmpty) pdf0
-            else pdf0.select(col("__pv") +:
-              partKeyDecompose(col("__pv"), pcs, partTypes): _*)
-          matchRows(pdf).select("__pv").collect().map(_.getString(0)).toSeq.sorted
-        }
-        if (dropped.isEmpty)
-          return Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil))
-        val gone = dropped.flatMap(p => m.files.getOrElse(p, Nil))
-        if (tryCommit(fs, bp,
-            Manifest(version, m.files -- dropped, m.stats -- gone,
-              m.blooms -- gone, m.dvs -- gone, m.schemaJson,
-              Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped))) {
-          if (cdfOn) {
-            val pre = align(
-              readFiles(spark, bp, m,
-                dropped.flatMap(p => m.files.getOrElse(p, Nil))),
-              live0.schema)
-            commitCdfVersion(fs, bp, version,
-              pre.withColumn("change_type", lit("delete"))
-                .withColumn("_commit_version", lit(version)))
+    commitLoop(fs, bp, maxRetries, "deleteWhere", base) { attempt =>
+      withManifest(fs, bp, Option.empty[DmlOutcome]) { m =>
+        requireCurrentLayout(m, partCol)
+        val version = nextVersion(fs, bp, m.version)
+        // mixed-layout tables (partition evolution) skip the
+        // partition-metadata fast path: legacy keys do not decompose
+        // under the current layout, and matching rows inside legacy
+        // partitions need a row-level plan anyway (the DV path below
+        // stays valid — deletion vectors are file-level)
+        if (partitionOnly && m.legacyKeys.isEmpty) {
+          // evaluate against the manifest's partition values only
+          val parts = m.files.keySet.toSeq.sorted
+          val dropped = {
+            val pdf0 = spark.createDataset(parts)(org.apache.spark.sql.Encoders.STRING)
+              .toDF("__pv")
+            // unpartitioned: the predicate is constant (refs empty), so
+            // no typed partition column to materialize
+            val pdf =
+              if (pcs.isEmpty) pdf0
+              else pdf0.select(col("__pv") +:
+                partKeyDecompose(col("__pv"), pcs, partTypes): _*)
+            sel.matches(pdf).select("__pv").collect().map(_.getString(0)).toSeq.sorted
           }
-          return Some(DmlOutcome(version, metadataOnly = true, dropped, Nil))
-        }
-      } else if (deletionVectors) {
-        // ---- merge-on-read row delete: commit DVs, rewrite nothing --
-        val all = m.allFiles
-        val bnToRel = all.map(f => dvKey(f) -> f).toMap
-        require(bnToRel.size == all.size,
-          "DV delete needs unique <dir>/<file> suffixes across live files " +
-            "(Spark part-file names embed the write job's UUID)")
-        val raw = toLogical(spark.read.option("mergeSchema", "true")
-          .parquet(all.map(f => new Path(bp, f).toString): _*)
-          .withColumn("__f", dvKeyCol)
-          .withColumn("__pos", col("_metadata.row_index")), m)
-        // only still-live rows may match: a position already in a DV is
-        // deleted — matching it again would double-count
-        val liveRows = dvRows(spark, bp, m, all) match {
-          case None => raw
-          case Some((dv, allInline)) =>
-            raw.join(if (allInline) broadcast(dv) else dv,
-              col("__f") === col("__dv_file") && col("__pos") === col("__dv_pos"),
-              "left_anti")
-        }
-        val matchedPos = matchRows(liveRows)
-          .select(col("__f"), col("__pos")).persist()
-        try {
-          // O(affected files) driver metadata, never row-sized
-          val newCounts = matchedPos.groupBy("__f").count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          if (newCounts.isEmpty)
-            return Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil))
-          // inline vs sidecar per file: a file stays inline while its
-          // TOTAL positions fit [[DvInlineMax]], its existing DV is not
-          // already a sidecar, and a global driver budget holds —
-          // everything else goes through the fully distributed sidecar
-          // write (an arbitrarily large delete never lands positions on
-          // the driver)
-          var budget = dvInlineMax * 10L
-          val decided = newCounts.keys.toSeq.sorted.map { bn =>
-            val rel0 = bnToRel(bn)
-            val old = m.dvs.get(rel0)
-            val total = newCounts(bn) + old.map(_.count).getOrElse(0L)
-            val inlineOk = total <= dvInlineMax &&
-              old.forall(_.sidecarRel.isEmpty) && total <= budget
-            if (inlineOk) budget -= total
-            (bn, rel0, old, total, inlineOk)
-          }
-          val inlineSet = decided.collect { case (bn, _, _, _, true) => bn }.toSet
-          val newDvs = collection.mutable.Map.empty[String, Dv]
-          if (inlineSet.nonEmpty) {
-            val fresh = matchedPos
-              .filter(col("__f").isin(inlineSet.toSeq: _*))
-              .collect().groupBy(_.getString(0))
-              .map { case (bn, rows) => bn -> rows.map(_.getLong(1)) }
-            decided.foreach { case (bn, rel0, old, total, inlineOk) =>
-              if (inlineOk) {
-                val merged = (old.flatMap(_.inlineB64).map(decodePositions)
-                  .getOrElse(Array.empty[Long]) ++ fresh.getOrElse(bn, Array.empty[Long]))
-                  .sorted
-                newDvs(rel0) = Dv(total, Some(encodePositions(merged)), None)
-              }
-            }
-          }
-          val sidecarDecided = decided.filter(!_._5)
-          if (sidecarDecided.nonEmpty) {
-            import spark.implicits._
-            val scSet = sidecarDecided.map(_._1).toSet
-            // old positions of sidecar-bound files union in distributedly
-            val olds = sidecarDecided.flatMap { case (bn, rel0, old, _, _) =>
-              old.map {
-                case Dv(_, Some(b64), _) =>
-                  decodePositions(b64).toSeq.map(bn -> _).toDF("__f", "__pos")
-                case Dv(_, None, Some(sRel)) =>
-                  spark.read.parquet(new Path(bp, sRel).toString)
-                    .select(lit(bn).as("__f"), col("pos").cast("long").as("__pos"))
-                case _ => sys.error("DV without payload")
-              }
-            }
-            val allPos = (matchedPos.filter(col("__f").isin(scSet.toSeq: _*))
-              +: olds).reduce(_ unionByName _)
-            val scRel = s"_dv/d$version-a$attempt-${
-              java.util.UUID.randomUUID.toString.take(8)}"
-            allPos.select(col("__f"), col("__pos").as("pos"))
-              .repartition(col("__f"))
-              .write.partitionBy("__f").parquet(new Path(bp, scRel).toString)
-            // dir names carry the Hive-ESCAPED dv key ('/' '=' '%'
-            // percent-encode): list and decode rather than re-derive
-            val dirByKey = fs.listStatus(new Path(bp, scRel)).toSeq
-              .filter(d => d.isDirectory && d.getPath.getName.startsWith("__f="))
-              .map(d => dec(d.getPath.getName.stripPrefix("__f=")) ->
-                s"$scRel/${d.getPath.getName}")
-              .toMap
-            sidecarDecided.foreach { case (bn, rel0, _, total, _) =>
-              newDvs(rel0) = Dv(total, None, Some(dirByKey(bn)))
-            }
-          }
-          if (tryCommit(fs, bp,
-              m.copy(version = version, dvs = m.dvs ++ newDvs,
-                op = Some("DELETE_DV")))) {
+          // whole partitions leave with their files' stats, blooms and
+          // DVs: a splice with nothing staged
+          if (dropped.isEmpty)
+            Done(Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil)))
+          else Commit(spliceStaged(spark, fs, bp, m, version, dropped, Nil,
+              Map.empty).copy(op = Some("DELETE")), {
             if (cdfOn) {
-              val feed = align(matchRows(liveRows), live0.schema)
+              val pre = align(readFiles(spark, bp, m,
+                dropped.flatMap(p => m.files.getOrElse(p, Nil))), live0.schema)
               commitCdfVersion(fs, bp, version,
-                feed.withColumn("change_type", lit("delete"))
-                  .withColumn("_commit_version", lit(version)))
+                pre.withColumn("change_type", lit("delete")))
             }
-            return Some(DmlOutcome(version, metadataOnly = false, Nil, Nil))
+            Some(DmlOutcome(version, metadataOnly = true, dropped, Nil))
+          })
+        } else if (deletionVectors) {
+          // ---- merge-on-read row delete: commit DVs, rewrite nothing --
+          val all = m.allFiles
+          val bnToRel = all.map(f => dvKey(f) -> f).toMap
+          require(bnToRel.size == all.size,
+            "DV delete needs unique <dir>/<file> suffixes across live files " +
+              "(Spark part-file names embed the write job's UUID)")
+          val raw = toLogical(spark.read.option("mergeSchema", "true")
+            .parquet(all.map(f => new Path(bp, f).toString): _*)
+            .withColumn("__f", dvKeyCol)
+            .withColumn("__pos", col("_metadata.row_index")), m)
+          // only still-live rows may match: a position already in a DV is
+          // deleted — matching it again would double-count
+          val liveRows = dvRows(spark, bp, m, all) match {
+            case None => raw
+            case Some((dv, allInline)) =>
+              raw.join(if (allInline) broadcast(dv) else dv,
+                col("__f") === col("__dv_file") && col("__pos") === col("__dv_pos"),
+                "left_anti")
           }
-        } finally matchedPos.unpersist()
-      } else {
-        // one column-pruned scan of THIS version's files finds the
-        // partitions holding matching rows (predicate pushdown skips
-        // row groups whose footer bounds exclude it)
-        // row ids are read-side identity metadata — a rewrite that let
-        // them into the staged frame (or a legacy schema backfill)
-        // would turn them into a data column
-        val lv = readVersion(spark, base, m.version)
-          .map(_.drop(RowIdCol)).getOrElse(return None)
-        // affected partitions under EVERY live layout: a matching row
-        // in a legacy (pre-evolution) partition is keyed under its own
-        // layout — the current-layout key alone would miss it
-        val matched = matchedKeysAllLayouts(matchRows(lv), m, partCol)
-        if (matched.isEmpty)
-          return Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil))
-        val preFiles = matched.flatMap(p => m.files.getOrElse(p, Nil))
-        val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
-        val keep = keepRows(pre)
-        val rel =
-          s"data/d$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        stagePartitioned(
-          toPhysical(keep.withColumn("__p", partRoute(partCol)), m),
-          m, fs, dir)
-        val staged = listStaged(fs, dir, rel)
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        // survivors of a rewritten LEGACY partition restaged under the
-        // current layout (migration) — splice-append, never replace an
-        // untouched partition's entry
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys, matched.toSet)
-        val stagedStats =
-          if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
-        val next = Manifest(
-          version,
-          spliceStaged(m.files, matched, stagedByPart),
-          (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-          m.blooms -- preFiles,
-          m.dvs -- preFiles,
-          // this pass read the whole live table, so a legacy manifest
-          // gets its schema header backfilled for free
-          m.schemaJson.orElse(Some(StructTypeNullable(lv.schema))),
-          Some("DELETE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-        if (tryCommit(fs, bp, next)) {
-          if (cdfOn) commitCdfVersion(fs, bp, version,
-            matchRows(pre)
-              .withColumn("change_type", lit("delete"))
-              .withColumn("_commit_version", lit(version)))
-          val stagedParts = staged.map(_._1).toSet
-          return Some(DmlOutcome(version, metadataOnly = false,
-            matched.filterNot(stagedParts), matched.filter(stagedParts)))
+          val matchedPos = sel.matches(liveRows)
+            .select(col("__f"), col("__pos")).persist()
+          try {
+            // O(affected files) driver metadata, never row-sized
+            val newCounts = matchedPos.groupBy("__f").count()
+              .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+            if (newCounts.isEmpty)
+              Done(Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil)))
+            else {
+              // inline vs sidecar per file: a file stays inline while its
+              // TOTAL positions fit [[DvInlineMax]], its existing DV is not
+              // already a sidecar, and a global driver budget holds —
+              // everything else goes through the fully distributed sidecar
+              // write (an arbitrarily large delete never lands positions on
+              // the driver)
+              var budget = dvInlineMax * 10L
+              val decided = newCounts.keys.toSeq.sorted.map { bn =>
+                val rel0 = bnToRel(bn)
+                val old = m.dvs.get(rel0)
+                val total = newCounts(bn) + old.map(_.count).getOrElse(0L)
+                val inlineOk = total <= dvInlineMax &&
+                  old.forall(_.sidecarRel.isEmpty) && total <= budget
+                if (inlineOk) budget -= total
+                (bn, rel0, old, total, inlineOk)
+              }
+              val inlineSet = decided.collect { case (bn, _, _, _, true) => bn }.toSet
+              val newDvs = collection.mutable.Map.empty[String, Dv]
+              if (inlineSet.nonEmpty) {
+                val fresh = matchedPos
+                  .filter(col("__f").isin(inlineSet.toSeq: _*))
+                  .collect().groupBy(_.getString(0))
+                  .map { case (bn, rows) => bn -> rows.map(_.getLong(1)) }
+                decided.foreach { case (bn, rel0, old, total, inlineOk) =>
+                  if (inlineOk) {
+                    val merged = (old.flatMap(_.inlineB64).map(decodePositions)
+                      .getOrElse(Array.empty[Long]) ++ fresh.getOrElse(bn, Array.empty[Long]))
+                      .sorted
+                    newDvs(rel0) = Dv(total, Some(encodePositions(merged)), None)
+                  }
+                }
+              }
+              val sidecarDecided = decided.filter(!_._5)
+              if (sidecarDecided.nonEmpty) {
+                import spark.implicits._
+                val scSet = sidecarDecided.map(_._1).toSet
+                // old positions of sidecar-bound files union in distributedly
+                val olds = sidecarDecided.flatMap { case (bn, rel0, old, _, _) =>
+                  old.map {
+                    case Dv(_, Some(b64), _) =>
+                      decodePositions(b64).toSeq.map(bn -> _).toDF("__f", "__pos")
+                    case Dv(_, None, Some(sRel)) =>
+                      spark.read.parquet(new Path(bp, sRel).toString)
+                        .select(lit(bn).as("__f"), col("pos").cast("long").as("__pos"))
+                    case _ => sys.error("DV without payload")
+                  }
+                }
+                val allPos = (matchedPos.filter(col("__f").isin(scSet.toSeq: _*))
+                  +: olds).reduce(_ unionByName _)
+                val scRel = s"_dv/d$version-a$attempt-${
+                  java.util.UUID.randomUUID.toString.take(8)}"
+                allPos.select(col("__f"), col("__pos").as("pos"))
+                  .repartition(col("__f"))
+                  .write.partitionBy("__f").parquet(new Path(bp, scRel).toString)
+                // dir names carry the Hive-ESCAPED dv key ('/' '=' '%'
+                // percent-encode): list and decode rather than re-derive
+                val dirByKey = fs.listStatus(new Path(bp, scRel)).toSeq
+                  .filter(d => d.isDirectory && d.getPath.getName.startsWith("__f="))
+                  .map(d => dec(d.getPath.getName.stripPrefix("__f=")) ->
+                    s"$scRel/${d.getPath.getName}")
+                  .toMap
+                sidecarDecided.foreach { case (bn, rel0, _, total, _) =>
+                  newDvs(rel0) = Dv(total, None, Some(dirByKey(bn)))
+                }
+              }
+              Commit(m.copy(version = version, dvs = m.dvs ++ newDvs,
+                  op = Some("DELETE_DV")), {
+                if (cdfOn) {
+                  val feed = align(sel.matches(liveRows), live0.schema)
+                  commitCdfVersion(fs, bp, version,
+                    feed.withColumn("change_type", lit("delete")))
+                }
+                Some(DmlOutcome(version, metadataOnly = false, Nil, Nil))
+              })
+            }
+          } finally matchedPos.unpersist()
+        } else {
+          // one column-pruned scan of THIS version's files finds the
+          // partitions holding matching rows (predicate pushdown skips
+          // row groups whose footer bounds exclude it)
+          withLiveRows(spark, base, m) { lv =>
+            // affected partitions under EVERY live layout: a matching row
+            // in a legacy (pre-evolution) partition is keyed under its own
+            // layout — the current-layout key alone would miss it
+            val matched = matchedKeysAllLayouts(sel.matches(lv), m, partCol)
+            if (matched.isEmpty)
+              Done(Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil)))
+            else {
+              val pre = align(readFiles(spark, bp, m,
+                matched.flatMap(p => m.files.getOrElse(p, Nil))), lv.schema)
+              rewritePartitions(spark, fs, bp, m, version, attempt, "d",
+                partCol, statsCols, sel.keeps(pre), lv.schema, matched,
+                "DELETE") {
+                if (cdfOn) commitCdfVersion(fs, bp, version,
+                  sel.matches(pre).withColumn("change_type", lit("delete")))
+              }
+            }
+          }
         }
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"deleteWhere lost $maxRetries commit races on $base")
   }
 
   /** REPLACE WHERE (Delta's `INSERT INTO … REPLACE WHERE` /
@@ -4768,108 +4772,69 @@ object SnapshotLog {
     val bp = new Path(base)
     val fs = fsFor(spark, bp)
     val cdfOn = writeCdf || readManifest(fs, bp).exists(_.cdfEnabled)
-    // conform, not cast: tolerates nullability-only differences and
-    // struct-arity gaps from nested add-column evolution. The USER
-    // BATCH aligns strict: an extra nested subfield the target schema
-    // lacks errors instead of silently discarding its data; survivors
-    // (the table's own files) align non-strict as everywhere else.
-    def align(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(to.fields.toSeq.map(f => conformTo(df, f)): _*)
-    def alignBatch(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(to.fields.toSeq.map(f => conformTo(df, f, strict = true)): _*)
+    val sel = selectors(predicate, None)
     val batch = rows.persist()
     try {
-      val violations =
-        batch.filter(!coalesce(predicate, lit(false))).count()
+      val violations = sel.keeps(batch).count()
       require(violations == 0L,
         s"$violations source rows do not satisfy the REPLACE WHERE " +
           "predicate — the replaced region and the insert would diverge")
       val batchParts = batch.select(partRoute(partCol))
         .distinct().collect().map(_.getString(0)).toSeq
-      var attempt = 0
-      while (attempt < maxRetries) {
-        val m = readManifest(fs, bp).getOrElse(return None)
-        requireCurrentLayout(m, partCol)
-        // idempotent-writer gate (appendBatch's contract): a replayed
-        // (appId, version) — a retried dynamic-overwrite backfill —
-        // reports the version that already holds it instead of
-        // replacing the same region twice
-        txn.foreach { case (a, v) =>
-          if (m.txns.get(a).exists(_ >= v))
-            return Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil))
-        }
-        val version = nextVersion(fs, bp, m.version)
-        val lv = readVersion(spark, base, m.version)
-          .map(_.drop(RowIdCol)).getOrElse(return None)
-        // matching rows in legacy (pre-evolution) partitions key under
-        // their own layout — compute the affected set under every one
-        val matchedParts = matchedKeysAllLayouts(
-          lv.filter(coalesce(predicate, lit(false))), m, partCol)
-        val affected = (matchedParts ++ batchParts).distinct.sorted
-        val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
-        // survivors keep their row ids through the rewrite (tracked
-        // tables): read with ids, carry as the materialized column
-        val preAll =
-          if (preFiles.isEmpty) lv.limit(0)
-          else if (m.rowTracking) readFilesWithRowIds(spark, bp, m, preFiles)
-          else readFiles(spark, bp, m, preFiles)
-        val mat =
-          if (!m.rowTracking) Nil
-          else Seq((if (preAll.columns.contains(RowIdCol)) col(RowIdCol)
-            else lit(null).cast("long")).as(MatRowIdCol))
-        val keepBase = preAll.filter(!coalesce(predicate, lit(false)))
-        val keepM =
-          if (mat.isEmpty) align(keepBase, lv.schema)
-          else
-            // align + carry the id column (align alone would drop it)
-            keepBase.select(
-              lv.schema.fields.toSeq.map(f => conformTo(keepBase, f)) ++
-                mat: _*)
-        val insM = alignBatch(batch, lv.schema)
-          .select(lv.schema.fieldNames.map(col).toSeq ++
-            (if (mat.isEmpty) Nil
-             else Seq(lit(null).cast("long").as(MatRowIdCol))): _*)
-        val out = keepM.unionByName(insM)
-        val rel =
-          s"data/r$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-        val dir = new Path(bp, rel)
-        stagePartitioned(
-          toPhysical(out.withColumn("__p", partRoute(partCol)), m),
-          m, fs, dir)
-        val staged = listStaged(fs, dir, rel)
-        val stagedByPart = staged.groupBy(_._1)
-          .map { case (p, fls) => p -> fls.map(_._2).sorted }
-        requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
-        val stagedStats =
-          if (statsCols.isEmpty || staged.isEmpty)
-            Map.empty[String, Map[String, (String, String)]]
-          else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
-        val next = Manifest(
-          version,
-          spliceStaged(m.files, affected, stagedByPart),
-          (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-          m.blooms -- preFiles,
-          m.dvs -- preFiles,
-          m.schemaJson.orElse(Some(StructTypeNullable(lv.schema))),
-          Some("REPLACE_WHERE"), m.constraints, m.txns ++ txn, m.props,
-          m.colmap, m.dropped)
-        if (tryCommit(fs, bp, next)) {
-          if (cdfOn) {
-            val del = align(preAll.filter(coalesce(predicate, lit(false))), lv.schema)
-              .withColumn("change_type", lit("delete"))
-            val ins = alignBatch(batch, lv.schema)
-              .withColumn("change_type", lit("insert"))
-            commitCdfVersion(fs, bp, version,
-              del.unionByName(ins).withColumn("_commit_version", lit(version)))
+      commitLoop(fs, bp, maxRetries, "replaceWhere", base) { attempt =>
+        withManifest(fs, bp, Option.empty[DmlOutcome]) { m =>
+          requireCurrentLayout(m, partCol)
+          // idempotent-writer gate (appendBatch's contract): a replayed
+          // (appId, version) — a retried dynamic-overwrite backfill —
+          // reports the version that already holds it instead of
+          // replacing the same region twice
+          if (txn.exists { case (a, v) => m.txns.get(a).exists(_ >= v) })
+            Done(Some(DmlOutcome(m.version, metadataOnly = true, Nil, Nil)))
+          else {
+            val version = nextVersion(fs, bp, m.version)
+            withLiveRows(spark, base, m) { lv =>
+              // matching rows in legacy (pre-evolution) partitions key under
+              // their own layout — compute the affected set under every one
+              val matchedParts = matchedKeysAllLayouts(sel.matches(lv), m, partCol)
+              val affected = (matchedParts ++ batchParts).distinct.sorted
+              val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
+              // survivors keep their row ids through the rewrite (tracked
+              // tables): read with ids, carry as the materialized column
+              val preAll =
+                if (preFiles.isEmpty) lv.limit(0)
+                else if (m.rowTracking) readFilesWithRowIds(spark, bp, m, preFiles)
+                else readFiles(spark, bp, m, preFiles)
+              val mat =
+                if (!m.rowTracking) Nil
+                else Seq((if (preAll.columns.contains(RowIdCol)) col(RowIdCol)
+                  else lit(null).cast("long")).as(MatRowIdCol))
+              val keepBase = sel.keeps(preAll)
+              val keepM =
+                if (mat.isEmpty) align(keepBase, lv.schema)
+                else
+                  // align + carry the id column (align alone would drop it)
+                  keepBase.select(
+                    lv.schema.fields.toSeq.map(f => conformTo(keepBase, f)) ++
+                      mat: _*)
+              val insM = align(batch, lv.schema, strict = true)
+                .select(lv.schema.fieldNames.map(col).toSeq ++
+                  (if (mat.isEmpty) Nil
+                   else Seq(lit(null).cast("long").as(MatRowIdCol))): _*)
+              rewritePartitions(spark, fs, bp, m, version, attempt, "r",
+                partCol, statsCols, keepM.unionByName(insM), lv.schema,
+                affected, "REPLACE_WHERE", txn) {
+                if (cdfOn) {
+                  val del = align(sel.matches(preAll), lv.schema)
+                    .withColumn("change_type", lit("delete"))
+                  val ins = align(batch, lv.schema, strict = true)
+                    .withColumn("change_type", lit("insert"))
+                  commitCdfVersion(fs, bp, version, del.unionByName(ins))
+                }
+              }
+            }
           }
-          val stagedParts = staged.map(_._1).toSet
-          return Some(DmlOutcome(version, metadataOnly = false,
-            affected.filterNot(stagedParts), affected.filter(stagedParts)))
         }
-        attempt += 1
       }
-      throw new IllegalStateException(
-        s"replaceWhere lost $maxRetries commit races on $base")
     } finally batch.unpersist()
   }
 
@@ -4919,142 +4884,107 @@ object SnapshotLog {
           s"cannot UPDATE GENERATED ALWAYS AS IDENTITY column $c")
       }
     }
-    def matchRows(df: DataFrame): DataFrame =
-      matcher.map(_.matches(df)).getOrElse(df.filter(predicate))
-    def keepRows(df: DataFrame): DataFrame =
-      matcher.map(_.keeps(df))
-        .getOrElse(df.filter(!coalesce(predicate, lit(false))))
+    val sel = selectors(predicate, matcher)
 
-    // conform, not cast: tolerates nullability-only differences and
-    // struct-arity gaps from nested add-column evolution
-    def align(df: DataFrame, to: org.apache.spark.sql.types.StructType): DataFrame =
-      df.select(to.fields.toSeq.map(f => conformTo(df, f)): _*)
-
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(return None)
-      requireCurrentLayout(m, partCol)
-      // generated PARTITION columns recompute below under the session
-      // clock — enforce the stamped generation timezone (throws on
-      // mismatch; the returned first-write stamp is append-path business)
-      genTzStamp(spark, m.props, partCol)
-      val version = nextVersion(fs, bp, m.version)
-      val lv = readVersion(spark, base, m.version)
-        .map(_.drop(RowIdCol)).getOrElse(return None)
-      val bad = set.keySet -- lv.columns.toSet
-      require(bad.isEmpty, s"updateWhere assigns non-existent columns: $bad")
-      // one column-pruned scan: source partitions of matching rows and
-      // (when partCol is reassigned) the destinations they move to
-      // post-assignment image of a matched row: every SET expression
-      // evaluates over the OLD row in one projection (SQL UPDATE
-      // semantics — `SET a = b, b = a` swaps), then GENERATED columns
-      // not explicitly SET recompute over the assigned values — so an
-      // update to a dependency of a generated PARTITION column moves
-      // the row to its recomputed partition
-      val gensToRecompute = generatedCols(m).filterNot { case (c, _) =>
-        set.keys.exists(_.equalsIgnoreCase(c)) }
-      def postImage(df: DataFrame, keep: Seq[Column]): DataFrame = {
-        val assigned = df.select(keep ++ lv.schema.fields.toSeq.map { f =>
-          set.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(col(f.name))
-        }: _*)
-        gensToRecompute.foldLeft(assigned) { case (acc, (c, sql)) =>
-          lv.schema.fields.find(_.name.equalsIgnoreCase(c)) match {
-            case Some(f) => acc.withColumn(f.name, expr(sql).cast(f.dataType))
-            case None => acc
+    commitLoop(fs, bp, maxRetries, "updateWhere", base) { attempt =>
+      withManifest(fs, bp, Option.empty[DmlOutcome]) { m =>
+        requireCurrentLayout(m, partCol)
+        // generated PARTITION columns recompute below under the session
+        // clock — enforce the stamped generation timezone (throws on
+        // mismatch; the returned first-write stamp is append-path business)
+        genTzStamp(spark, m.props, partCol)
+        val version = nextVersion(fs, bp, m.version)
+        withLiveRows(spark, base, m) { lv =>
+          val bad = set.keySet -- lv.columns.toSet
+          require(bad.isEmpty, s"updateWhere assigns non-existent columns: $bad")
+          // one column-pruned scan: source partitions of matching rows and
+          // (when partCol is reassigned) the destinations they move to
+          // post-assignment image of a matched row: every SET expression
+          // evaluates over the OLD row in one projection (SQL UPDATE
+          // semantics — `SET a = b, b = a` swaps), then GENERATED columns
+          // not explicitly SET recompute over the assigned values — so an
+          // update to a dependency of a generated PARTITION column moves
+          // the row to its recomputed partition
+          val gensToRecompute = generatedCols(m).filterNot { case (c, _) =>
+            set.keys.exists(_.equalsIgnoreCase(c)) }
+          def postImage(df: DataFrame, keep: Seq[Column]): DataFrame = {
+            val assigned = df.select(keep ++ lv.schema.fields.toSeq.map { f =>
+              set.get(f.name).map(_.cast(f.dataType).as(f.name))
+                .getOrElse(col(f.name))
+            }: _*)
+            gensToRecompute.foldLeft(assigned) { case (acc, (c, sql)) =>
+              lv.schema.fields.find(_.name.equalsIgnoreCase(c)) match {
+                case Some(f) => acc.withColumn(f.name, expr(sql).cast(f.dataType))
+                case None => acc
+              }
+            }
+          }
+          val affected: Seq[String] =
+            if (m.legacyKeys.isEmpty) {
+              val pairs = postImage(
+                sel.matches(lv).withColumn("__gsrc", partRoute(partCol)),
+                Seq(col("__gsrc")))
+                .select(col("__gsrc").as("__src"),
+                  partRoute(partCol).as("__dst"))
+                .distinct().collect()
+              (pairs.map(_.getString(0)) ++ pairs.map(_.getString(1)))
+                .distinct.sorted.toSeq
+            } else {
+              // mixed layout (partition evolution): SOURCE partitions under
+              // every live layout (a matching row in a legacy partition is
+              // keyed under its own layout), DESTINATIONS under the current
+              // one (the rewrite routes there — migration)
+              val matchedLv = sel.matches(lv)
+              val src = matchedKeysAllLayouts(matchedLv, m, partCol)
+              val dst = postImage(matchedLv, Nil)
+                .select(partRoute(partCol).as("__dst")).distinct()
+                .collect().iterator.map(_.getString(0)).filter(_ != null).toSeq
+              (src ++ dst).distinct.sorted
+            }
+          if (affected.isEmpty)
+            Done(Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil)))
+          else {
+            val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
+            val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
+            val updated = postImage(sel.matches(pre), Nil)
+            enforceConstraints(updated, m, base)
+            // a GENERATED column the statement SETs explicitly skips the
+            // recompute above — but the stored value must still satisfy its
+            // expression over the post-image, or UPDATE would break the
+            // invariant every insert/upsert validates (Delta validates or
+            // refuses explicit assignment; we validate). One aggregation
+            // pass, null-strict: SET g = NULL where the expression is
+            // non-null is a violation too.
+            val gensSet = generatedCols(m).filter { case (c, _) =>
+              set.keys.exists(_.equalsIgnoreCase(c)) }
+            if (gensSet.nonEmpty) {
+              val aggs = gensSet.map { case (c, sql) =>
+                sum(when(!(col(c) <=> expr(sql)), 1L).otherwise(0L)).as(s"__g_$c") }
+              val row0 = updated.agg(aggs.head, aggs.tail: _*).head
+              gensSet.zipWithIndex.foreach { case ((c, sql), i) =>
+                val bad = if (row0.isNullAt(i)) 0L else row0.getLong(i)
+                if (bad > 0) sys.error(
+                  s"UPDATE sets GENERATED column $c to a value that differs " +
+                    s"from ($sql) in $bad row(s)")
+              }
+            }
+            rewritePartitions(spark, fs, bp, m, version, attempt, "u", partCol,
+              statsCols, sel.keeps(pre).unionByName(updated), lv.schema, affected,
+              "UPDATE") {
+              if (cdfOn) {
+                val cols = lv.columns.toSeq
+                val feed = sel.matches(pre)
+                  .withColumn("change_type", lit("update_preimage"))
+                  .unionByName(updated
+                    .withColumn("change_type", lit("update_postimage")))
+                  .select((cols.map(col) :+ col("change_type")): _*)
+                commitCdfVersion(fs, bp, version, feed)
+              }
+            }
           }
         }
       }
-      val affected: Seq[String] =
-        if (m.legacyKeys.isEmpty) {
-          val pairs = postImage(
-            matchRows(lv).withColumn("__gsrc", partRoute(partCol)),
-            Seq(col("__gsrc")))
-            .select(col("__gsrc").as("__src"),
-              partRoute(partCol).as("__dst"))
-            .distinct().collect()
-          (pairs.map(_.getString(0)) ++ pairs.map(_.getString(1)))
-            .distinct.sorted.toSeq
-        } else {
-          // mixed layout (partition evolution): SOURCE partitions under
-          // every live layout (a matching row in a legacy partition is
-          // keyed under its own layout), DESTINATIONS under the current
-          // one (the rewrite routes there — migration)
-          val matchedLv = matchRows(lv)
-          val src = matchedKeysAllLayouts(matchedLv, m, partCol)
-          val dst = postImage(matchedLv, Nil)
-            .select(partRoute(partCol).as("__dst")).distinct()
-            .collect().iterator.map(_.getString(0)).filter(_ != null).toSeq
-          (src ++ dst).distinct.sorted
-        }
-      if (affected.isEmpty)
-        return Some(DmlOutcome(m.version, metadataOnly = false, Nil, Nil))
-      val preFiles = affected.flatMap(p => m.files.getOrElse(p, Nil))
-      val pre = align(readFiles(spark, bp, m, preFiles), lv.schema)
-      val updated = postImage(matchRows(pre), Nil)
-      enforceConstraints(updated, m, base)
-      // a GENERATED column the statement SETs explicitly skips the
-      // recompute above — but the stored value must still satisfy its
-      // expression over the post-image, or UPDATE would break the
-      // invariant every insert/upsert validates (Delta validates or
-      // refuses explicit assignment; we validate). One aggregation
-      // pass, null-strict: SET g = NULL where the expression is
-      // non-null is a violation too.
-      val gensSet = generatedCols(m).filter { case (c, _) =>
-        set.keys.exists(_.equalsIgnoreCase(c)) }
-      if (gensSet.nonEmpty) {
-        val aggs = gensSet.map { case (c, sql) =>
-          sum(when(!(col(c) <=> expr(sql)), 1L).otherwise(0L)).as(s"__g_$c") }
-        val row0 = updated.agg(aggs.head, aggs.tail: _*).head
-        gensSet.zipWithIndex.foreach { case ((c, sql), i) =>
-          val bad = if (row0.isNullAt(i)) 0L else row0.getLong(i)
-          if (bad > 0) sys.error(
-            s"UPDATE sets GENERATED column $c to a value that differs " +
-              s"from ($sql) in $bad row(s)")
-        }
-      }
-      val kept = keepRows(pre)
-      val rel =
-        s"data/u$version-a$attempt-${java.util.UUID.randomUUID.toString.take(8)}"
-      val dir = new Path(bp, rel)
-      stagePartitioned(
-        toPhysical(kept.unionByName(updated)
-          .withColumn("__p", partRoute(partCol)), m),
-        m, fs, dir)
-      val staged = listStaged(fs, dir, rel)
-      val stagedByPart = staged.groupBy(_._1)
-        .map { case (p, fls) => p -> fls.map(_._2).sorted }
-      requireNoLegacyCollision(m, partCol, stagedByPart.keys, affected.toSet)
-      val stagedStats =
-        if (statsCols.isEmpty || staged.isEmpty) Map.empty[String, Map[String, (String, String)]]
-        else fileStats(spark, fs, dir, rel, statsCols.map(m.phys))
-      val next = Manifest(
-        version,
-        spliceStaged(m.files, affected, stagedByPart),
-        (m.stats -- preFiles) ++ mergeFileStats(sizeStats(spark, fs, bp, staged), stagedStats),
-        m.blooms -- preFiles,
-        m.dvs -- preFiles,
-        m.schemaJson.orElse(Some(StructTypeNullable(lv.schema))),
-        Some("UPDATE"), m.constraints, m.txns, m.props, m.colmap, m.dropped)
-      if (tryCommit(fs, bp, next)) {
-        if (cdfOn) {
-          val cols = lv.columns.toSeq
-          val feed = matchRows(pre)
-            .withColumn("change_type", lit("update_preimage"))
-            .unionByName(updated
-              .withColumn("change_type", lit("update_postimage")))
-            .select((cols.map(col) :+ col("change_type")): _*)
-          commitCdfVersion(fs, bp, version,
-            feed.withColumn("_commit_version", lit(version)))
-        }
-        val stagedParts = staged.map(_._1).toSet
-        return Some(DmlOutcome(version, metadataOnly = false,
-          affected.filterNot(stagedParts), affected.filter(stagedParts)))
-      }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"updateWhere lost $maxRetries commit races on $base")
   }
 
   /** Change-data-feed read: every row-level change between two
@@ -5241,7 +5171,8 @@ object SnapshotLog {
         .getOrElse(0L)
     }
 
-  /** Write one version's feed and publish it by rename; loses cleanly
+  /** Write one version's feed, stamped with its `_commit_version`, and
+    * publish it by rename; loses cleanly
     * (keeps the existing dir) if the version is already materialized —
     * e.g. a concurrent [[repairCdf]] got there first. */
   private def commitCdfVersion(
@@ -5250,7 +5181,7 @@ object SnapshotLog {
     if (fs.exists(target)) return
     val tmp = new Path(cdfDir(base),
       s".tmp-${cdfVName(v)}-${java.util.UUID.randomUUID.toString.take(8)}")
-    feed.write.parquet(tmp.toString)
+    feed.withColumn("_commit_version", lit(v)).write.parquet(tmp.toString)
     if (!fs.rename(tmp, target)) {
       fs.delete(tmp, true)
       if (!fs.exists(target)) throw new IllegalStateException(
@@ -5345,7 +5276,7 @@ object SnapshotLog {
             df.drop(RowIdCol).withColumn("change_type", lit("insert")))
         else diffVersions(spark, base, keys, v - 1, v)
       feed.map { f =>
-        commitCdfVersion(fs, bp, v, f.withColumn("_commit_version", lit(v)))
+        commitCdfVersion(fs, bp, v, f)
         v
       }
     }
@@ -5631,26 +5562,16 @@ object SnapshotLog {
   def addConstraint(
       spark: SparkSession, base: String, name: String, checkSql: String,
       maxRetries: Int = 5): Long = {
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    alterTable(spark, base, maxRetries, "ADD CONSTRAINT") { (m, version) =>
       require(!m.constraints.contains(name),
         s"constraint $name already exists on $base")
-      val live = readSnapshot(spark, bp, m, None)
+      val live = readSnapshot(spark, new Path(base), m, None)
       enforceConstraints(live, m.copy(constraints = Map(name -> checkSql)),
         base)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           constraints = m.constraints + (name -> checkSql),
-          op = Some("ADD_CONSTRAINT"))))
-        return version
-      attempt += 1
+          op = Some("ADD_CONSTRAINT"))
     }
-    throw new IllegalStateException(
-      s"ADD CONSTRAINT lost $maxRetries commit races on $base")
   }
 
   /** CREATE TABLE (empty, schema-first): commit an empty snapshot
@@ -5682,12 +5603,7 @@ object SnapshotLog {
   def setProperties(
       spark: SparkSession, base: String, kvs: Map[String, String],
       maxRetries: Int = 5): Long = {
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    alterTable(spark, base, maxRetries, "SET TBLPROPERTIES") { (m, version) =>
       // bucket spec can only be declared while the table has no data
       // files: existing files lack the `_NNNNN` bucket tag, and a
       // mixed layout would fail the bucketed scan outright. (UNSET is
@@ -5709,14 +5625,9 @@ object SnapshotLog {
         sys.error("IDENTITY columns must be declared while the table " +
           s"is empty — $base already has data whose values the " +
           "high-water mark cannot account for")
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          props = m.props ++ kvs, op = Some("SET_TBLPROPERTIES"))))
-        return version
-      attempt += 1
+      m.copy(version = version,
+          props = m.props ++ kvs, op = Some("SET_TBLPROPERTIES"))
     }
-    throw new IllegalStateException(
-      s"SET TBLPROPERTIES lost $maxRetries commit races on $base")
   }
 
   /** UNSET table properties by key — metadata-only commit. */
@@ -5732,12 +5643,7 @@ object SnapshotLog {
       spark: SparkSession, base: String,
       newCols: org.apache.spark.sql.types.StructType,
       maxRetries: Int = 5): Long = {
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    alterTable(spark, base, maxRetries, "ADD COLUMNS") { (m, version) =>
       val cur = m.schema.getOrElse(sys.error(
         s"$base has no schema header (legacy manifest) — any write, or " +
           "ANALYZE … COMPUTE STATISTICS, records one first"))
@@ -5747,18 +5653,13 @@ object SnapshotLog {
         s"column(s) already exist on $base: ${dups.mkString(", ")}")
       val evolved = org.apache.spark.sql.types.StructType(
         cur.fields ++ newCols.fields.map(_.copy(nullable = true)))
-      val version = nextVersion(fs, bp, m.version)
       val freshMap = newCols.fieldNames.toSeq
         .filter(n => m.taintedPhys.contains(n))
         .map(n => n -> s"${n}__c$version").toMap
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           schemaJson = Some(evolved.json), op = Some("ADD_COLUMNS"),
-          colmap = m.colmap ++ freshMap)))
-        return version
-      attempt += 1
+          colmap = m.colmap ++ freshMap)
     }
-    throw new IllegalStateException(
-      s"ADD COLUMNS lost $maxRetries commit races on $base")
   }
 
   /** ADD a NESTED field — `ALTER TABLE t ADD COLUMNS (s.x INT)`:
@@ -5778,12 +5679,7 @@ object SnapshotLog {
     import org.apache.spark.sql.types.{StructField, StructType}
     require(path.size >= 2, "addNestedColumn needs a nested path " +
       "(parent.field); use addColumns for top-level columns")
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    alterTable(spark, base, maxRetries, "ADD COLUMNS") { (m, version) =>
       val cur = m.schema.getOrElse(sys.error(
         s"$base has no schema header (legacy manifest) — any write, or " +
           "ANALYZE … COMPUTE STATISTICS, records one first"))
@@ -5805,7 +5701,6 @@ object SnapshotLog {
           }
       }
       val evolved = addAt(cur, path)
-      val version = nextVersion(fs, bp, m.version)
       // resurrection-proof physical slot: a tainted identity name maps
       // to a fresh physical name within the parent struct
       val parentLog = path.init.mkString(".")
@@ -5814,14 +5709,10 @@ object SnapshotLog {
         if (scopeTainted(m, parentLog, path.last))
           Map(leafLog -> s"${path.last}__c$version")
         else Map.empty[String, String]
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           schemaJson = Some(evolved.json), op = Some("ADD_COLUMNS"),
-          colmap = m.colmap ++ freshMap)))
-        return version
-      attempt += 1
+          colmap = m.colmap ++ freshMap)
     }
-    throw new IllegalStateException(
-      s"ADD COLUMNS lost $maxRetries commit races on $base")
   }
 
   /** RENAME a NESTED field (`meta.name → meta.nm`) as a METADATA-ONLY
@@ -5841,12 +5732,7 @@ object SnapshotLog {
     require(path.size >= 2, "renameNestedColumn needs a nested path " +
       "(parent.field); use renameColumn for top-level columns")
     require(!to.contains('.') && to.nonEmpty, s"invalid field name '$to'")
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    alterTable(spark, base, maxRetries, "nested RENAME COLUMN") { (m, version) =>
       val cur = m.schema.getOrElse(sys.error(
         "nested RENAME needs a schema header (legacy manifest) — any " +
           "write records one first"))
@@ -5887,15 +5773,10 @@ object SnapshotLog {
       val colmap =
         if (physLeaf == to) rekeyed - newLog
         else rekeyed + (newLog -> physLeaf)
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           schemaJson = Some(StructTypeNullable(evolved)),
-          op = Some("RENAME_COLUMN"), colmap = colmap)))
-        return version
-      attempt += 1
+          op = Some("RENAME_COLUMN"), colmap = colmap)
     }
-    throw new IllegalStateException(
-      s"nested RENAME COLUMN lost $maxRetries commit races on $base")
   }
 
   /** DROP a NESTED field as a METADATA-ONLY commit: the logical schema
@@ -5912,12 +5793,7 @@ object SnapshotLog {
     import org.apache.spark.sql.types.StructType
     require(path.size >= 2, "dropNestedColumn needs a nested path " +
       "(parent.field); use dropColumn for top-level columns")
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    alterTable(spark, base, maxRetries, "nested DROP COLUMN") { (m, version) =>
       val cur = m.schema.getOrElse(sys.error(
         "nested DROP needs a schema header (legacy manifest) — any " +
           "write records one first"))
@@ -5949,58 +5825,33 @@ object SnapshotLog {
       // the dropped subtree's own mappings die with it
       val colmap = m.colmap.filterNot { case (k, _) =>
         k == logPath || k.startsWith(logPath + ".") }
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           schemaJson = Some(StructTypeNullable(evolved)),
           op = Some("DROP_COLUMN"), colmap = colmap,
-          dropped = m.dropped + physPath)))
-        return version
-      attempt += 1
+          dropped = m.dropped + physPath)
     }
-    throw new IllegalStateException(
-      s"nested DROP COLUMN lost $maxRetries commit races on $base")
   }
 
   def unsetProperties(
       spark: SparkSession, base: String, keys: Seq[String],
       maxRetries: Int = 5): Long = {
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
-          props = m.props -- keys, op = Some("UNSET_TBLPROPERTIES"))))
-        return version
-      attempt += 1
+    alterTable(spark, base, maxRetries, "UNSET TBLPROPERTIES") { (m, version) =>
+      m.copy(version = version,
+          props = m.props -- keys, op = Some("UNSET_TBLPROPERTIES"))
     }
-    throw new IllegalStateException(
-      s"UNSET TBLPROPERTIES lost $maxRetries commit races on $base")
   }
 
   /** DROP a named CHECK constraint — metadata-only commit. */
   def dropConstraint(
       spark: SparkSession, base: String, name: String,
       maxRetries: Int = 5): Long = {
-    val bp = new Path(base)
-    val fs = fsFor(spark, bp)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val m = readManifest(fs, bp).getOrElse(
-        sys.error(s"$base has no committed version"))
+    alterTable(spark, base, maxRetries, "DROP CONSTRAINT") { (m, version) =>
       require(m.constraints.contains(name),
         s"no constraint named $name on $base")
-      val version = nextVersion(fs, bp, m.version)
-      if (tryCommit(fs, bp, m.copy(version = version,
+      m.copy(version = version,
           constraints = m.constraints - name,
-          op = Some("DROP_CONSTRAINT"))))
-        return version
-      attempt += 1
+          op = Some("DROP_CONSTRAINT"))
     }
-    throw new IllegalStateException(
-      s"DROP CONSTRAINT lost $maxRetries commit races on $base")
   }
 
   /** RESTORE: roll the table back to committed version `toVersion` by
@@ -6019,27 +5870,24 @@ object SnapshotLog {
     val target = readManifestAt(fs, bp, toVersion).getOrElse(
       sys.error(s"RESTORE target version $toVersion does not exist " +
         s"(expired or never committed) on $base"))
-    var attempt = 0
-    while (attempt < maxRetries) {
+    commitLoop(fs, bp, maxRetries, "RESTORE", base) { _ =>
       val cur = readManifest(fs, bp).getOrElse(
         sys.error(s"$base has no committed version"))
-      if (cur.version == toVersion) return toVersion // already there
-      val version = nextVersion(fs, bp, cur.version)
-      // txn watermarks must NEVER move backwards (a rolled-back
-      // watermark would make a restarting stream re-apply batches the
-      // table already absorbed) — merge key-wise max with the current
-      // state instead of restoring the old map verbatim
-      val txns = (cur.txns.keySet ++ target.txns.keySet).iterator.map { a =>
-        a -> math.max(cur.txns.getOrElse(a, Long.MinValue),
-          target.txns.getOrElse(a, Long.MinValue))
-      }.toMap
-      if (tryCommit(fs, bp,
-          target.copy(version = version, op = Some("RESTORE"), txns = txns)))
-        return version
-      attempt += 1
+      if (cur.version == toVersion) Done(toVersion) // already there
+      else {
+        val version = nextVersion(fs, bp, cur.version)
+        // txn watermarks must NEVER move backwards (a rolled-back
+        // watermark would make a restarting stream re-apply batches the
+        // table already absorbed) — merge key-wise max with the current
+        // state instead of restoring the old map verbatim
+        val txns = (cur.txns.keySet ++ target.txns.keySet).iterator.map { a =>
+          a -> math.max(cur.txns.getOrElse(a, Long.MinValue),
+            target.txns.getOrElse(a, Long.MinValue))
+        }.toMap
+        Commit(target.copy(version = version, op = Some("RESTORE"), txns = txns),
+          version)
+      }
     }
-    throw new IllegalStateException(
-      s"RESTORE lost $maxRetries commit races on $base")
   }
 
   /** Expire every committed version older than the newest `keepLast`,

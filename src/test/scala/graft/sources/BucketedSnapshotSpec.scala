@@ -5,9 +5,13 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{GraftSessions, SparkSpec}
 
@@ -228,5 +232,51 @@ class BucketedSnapshotSpec extends SparkSpec {
     assert(er.getMessage.contains("bucket"), er.getMessage)
     val ed = intercept[Exception] { s.sql(s"ALTER TABLE $v2 DROP COLUMN id") }
     assert(ed.getMessage.contains("bucket"), ed.getMessage)
+  }
+
+  test("bucketed append and upsert stage with ONE layout shuffle, not a rebalance on top") {
+    import s.implicits._
+    // layout exchanges (bucket routing, rebalance hint) of every staged
+    // write under data/b* — the append/upsert staging dirs; the merge
+    // join's own exchanges are ENSURE_REQUIREMENTS and not counted
+    val layout = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        helper.collect(qe.executedPlan) { case w: DataWritingCommandExec => w }
+          .foreach { w =>
+            w.cmd match {
+              case c: InsertIntoHadoopFsRelationCommand
+                  if c.outputPath.toString.contains("/data/b") =>
+                layout.add(helper.collect(w.child) {
+                  case e: ShuffleExchangeExec if e.shuffleOrigin != ENSURE_REQUIREMENTS => e
+                }.size)
+              case _ =>
+            }
+          }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val base = Files.createTempDirectory("graft_bkt_shuffle").toString + "/tbl"
+    assert(SnapshotLog.createTable(s, base,
+      new org.apache.spark.sql.types.StructType()
+        .add("id", "long").add("value", "double").add("day", "string"),
+      Map(SnapshotLog.BucketCountProp -> "4", SnapshotLog.BucketColsProp -> "id")))
+    s.listenerManager.register(listener)
+    try {
+      SnapshotLog.appendBatch(s, base,
+        (1L to 40L).map(i => (i, i * 1.0, s"d${i % 2}")).toDF("id", "value", "day"),
+        "day", 1L)
+      SnapshotLog.upsertBatch(s, base,
+        (30L to 50L).map(i => (i, i * 2.0, s"d${i % 2}")).toDF("id", "value", "day"),
+        "id", "value", "day", 2L)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (layout.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally s.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(layout.asScala.toSeq == Seq(1, 1),
+      s"layout shuffles per staged write (append, upsert): $layout")
+    assert(files(base).forall(f => SnapshotLog.bucketIdOf(f).isDefined))
+    assert(SnapshotLog.read(s, base).get.count() == 50)
   }
 }

@@ -200,8 +200,8 @@ class ConcurrencyStressSpec extends SparkSpec {
       batchId = 1L, maxRetries = 5, statsCols = Nil, clusterBy = Nil,
       clusterFiles = 4, opCol = None, writeCdf = false)
     @volatile var fired = false
-    SnapshotLog.onBeforeUpsertCommit = () => {
-      if (!fired) {
+    SnapshotLog.onBeforeCommit = op => {
+      if (op == "UPSERT" && !fired) {
         fired = true
         SnapshotLog.deleteWhere(spark, base, col("id") === 3L, "day",
           deletionVectors = true)
@@ -212,7 +212,7 @@ class ConcurrencyStressSpec extends SparkSpec {
       SnapshotLog.upsertBatch(spark, base, batch2, Seq("id"), "v", "day",
         batchId = 2L, maxRetries = 5, statsCols = Nil, clusterBy = Nil,
         clusterFiles = 4, opCol = None, writeCdf = false)
-    } finally SnapshotLog.onBeforeUpsertCommit = () => ()
+    } finally SnapshotLog.onBeforeCommit = _ => ()
     assert(fired, "the race window never opened — seam not reached")
     val ids = SnapshotLog.read(spark, base).get
       .select("id").collect().map(_.getLong(0)).toSet

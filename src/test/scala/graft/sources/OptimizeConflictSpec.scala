@@ -43,8 +43,8 @@ class OptimizeConflictSpec extends SparkSpec {
     SnapshotLog.appendBatch(s, base, batch(0), "p", 1L)
     SnapshotLog.appendBatch(s, base, batch(100), "p", 2L)
     @volatile var fired = false
-    SnapshotLog.onBeforeOptimizeCommit = () => {
-      if (!fired) {
+    SnapshotLog.onBeforeCommit = op => {
+      if (op == "OPTIMIZE" && !fired) {
         fired = true
         // the racer APPENDS into d0 — a partition OPTIMIZE is folding
         SnapshotLog.appendBatch(s, base,
@@ -53,7 +53,7 @@ class OptimizeConflictSpec extends SparkSpec {
     }
     try {
       assert(SnapshotLog.optimizeTable(s, base, "p") > 0)
-    } finally SnapshotLog.onBeforeOptimizeCommit = () => ()
+    } finally SnapshotLog.onBeforeCommit = _ => ()
     assert(fired, "the race must actually have been injected")
     // the retry was metadata-only: exactly ONE staging attempt exists
     val dirs = optimizeStagingDirs(base)
@@ -76,8 +76,8 @@ class OptimizeConflictSpec extends SparkSpec {
     SnapshotLog.appendBatch(s, base, batch(0), "p", 1L)
     SnapshotLog.appendBatch(s, base, batch(100), "p", 2L)
     @volatile var fired = false
-    SnapshotLog.onBeforeOptimizeCommit = () => {
-      if (!fired) {
+    SnapshotLog.onBeforeCommit = op => {
+      if (op == "OPTIMIZE" && !fired) {
         fired = true
         // the racer REWRITES d1 (row delete replaces its files) — the
         // staged fold read those files, so reusing it would resurrect
@@ -87,7 +87,7 @@ class OptimizeConflictSpec extends SparkSpec {
     }
     try {
       assert(SnapshotLog.optimizeTable(s, base, "p") > 0)
-    } finally SnapshotLog.onBeforeOptimizeCommit = () => ()
+    } finally SnapshotLog.onBeforeCommit = _ => ()
     // the staged output was invalidated → a second attempt staged
     val dirs = optimizeStagingDirs(base)
     assert(dirs.exists(_.contains("-a1-")),
